@@ -20,7 +20,7 @@ columns — deterministic across runs/partitions (fixed seeds, FIXTURES.md
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -152,7 +152,7 @@ def minhash_lsh_candidates(
     over the uncapped set (the invariant the star gave;
     pinned by test_minhash_pair_cap_bounds_mega_cluster and
     test_capped_funnel_semantics) — group-collapse consumers
-    (connected_components* / dedup_by_components) lose nothing, while
+    (connected_components / dedup_by_components) lose nothing, while
     output per bucket drops from quadratic to ≤ cap. The locality key
     costs nothing (the next band's hash is already computed) and puts
     Jaccard-similar docs adjacent with probability sim^rows_per_band
@@ -332,8 +332,9 @@ def dedup_funnel(
     the candidate stage precisely so consumers can detect this
     mechanically; rows with truncated = 0 are unaffected — their buckets
     emitted exhaustively). Consumers that collapse groups should run
-    connected components over the CANDIDATE pairs (exactly component-
-    preserving under the cap) rather than over verified funnel pairs;
+    ``connected_components`` over the CANDIDATE pairs (exactly
+    component-preserving under the cap) rather than over verified
+    funnel pairs;
     consumers that need the exact verified pair set inside capped
     groups should re-run those groups with
     ``max_pairs_per_bucket=None, pair_cap_factor=None``. Both behaviors
@@ -421,345 +422,132 @@ def dedup_funnel(
     )
 
 
+# Rounds connected_components runs before it raises. Star rounds need
+# O(log² n) of them at worst (10 for a 512-node chain), so reaching this
+# bound means a defect, not a hard graph.
+_MAX_CC_ROUNDS = 100
+
+
+def _persist(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
+    """Eager lineage cut: a RELIABLE checkpoint into ``checkpoint_dir``
+    (HDFS/object store — survives executor loss) when one is given,
+    otherwise ``localCheckpoint``."""
+    if checkpoint_dir is None:
+        return df.localCheckpoint(eager=True)
+    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    return df.checkpoint(eager=True)
+
+
+def _point_at(nodes: Column, target: Column) -> Column:
+    """One (src = node, dst = target) row per element of ``nodes``."""
+    return F.explode(
+        F.transform(nodes, lambda x: F.struct(x.alias("src"), target.alias("dst")))
+    ).alias("__e")
+
+
+def _small_star(edges: DataFrame) -> DataFrame:
+    """Every node u and its smaller neighbours re-point at
+    m(u) = least(u, min neighbour). A node whose only row is its own
+    self-pair (u, u) keeps that row."""
+    g = (
+        edges.groupBy("src")
+        .agg(F.collect_set("dst").alias("__n"))
+        .select(F.array_union(F.col("__n"), F.array(F.col("src"))).alias("__c"))
+        # m and the group size are columns, not lambda-inlined
+        # expressions, so each is computed once per group, not per member
+        .select("__c", F.array_min("__c").alias("__m"), F.size("__c").alias("__k"))
+    )
+    m = F.col("__m")
+    movers = F.filter(F.col("__c"), lambda x: (x != m) | (F.col("__k") == 1))
+    return g.select(_point_at(movers, m)).select("__e.*")
+
+
+def _large_star(edges: DataFrame, unsettled: Observation) -> DataFrame:
+    """Every node u's larger neighbours re-point at m(u) = least(u, min
+    neighbour), and u keeps a (u, u) row when it has no smaller
+    neighbour. ``unsettled`` observes how many nodes are neither a root
+    (no smaller neighbour) nor a leaf (exactly one neighbour, smaller):
+    zero means the input is a star forest, which this step reproduces
+    row for row."""
+    sym = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("u"), F.col("dst").alias("v")),
+                F.struct(F.col("dst").alias("u"), F.col("src").alias("v")),
+            )
+        ).alias("__e")
+    ).select("__e.*")
+    u, m = F.col("u"), F.col("__m")
+    g = (
+        sym.groupBy("u")
+        .agg(F.collect_set("v").alias("__n"))
+        .select("u", "__n", F.least(u, F.array_min("__n")).alias("__m"))
+        .observe(
+            unsettled,
+            F.count_if(
+                (m < u) & (F.size(F.array_remove(F.col("__n"), u)) > 1)
+            ).alias("n"),
+        )
+    )
+    movers = F.filter(
+        F.array_union(F.col("__n"), F.array(u)), lambda v: (v > u) | (m == u)
+    )
+    return g.select(_point_at(movers, m)).select("__e.*")
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
-    n_sweeps: int | None = None,
-    verify_converged: bool = True,
     checkpoint_dir: str | None = None,
-    on_nonconvergence: str = "raise",
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph — the stage
     that turns PAIRS into CLUSTERS so one canonical doc per cluster can
     be kept. Returns (id, component) where component = the smallest id
-    reachable from ``id``; rows not appearing in any pair are simply
-    absent (they are their own singleton cluster by definition).
+    reachable from ``id``: exactly one row per id named in ``pairs`` (an
+    id seen only in a self-pair (a, a) is its own component). Ids in no
+    pair are absent — each is its own singleton cluster by definition —
+    and a pair with a null id names no edge.
 
-    Algorithm: iterative min-label propagation. Each sweep joins the
-    (undirected) edge list against current labels, takes the min over
-    each node's neighborhood ∪ itself, and stops when no label changed —
-    convergence after O(component diameter) sweeps, which for dedup
-    clusters (dense little cliques from LSH verification) is 2-3.
+    Algorithm: alternating small-star / large-star rounds (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC'14) over
+    the edge list oriented larger → smaller id. Each round is a
+    small-star then a large-star (see the two helpers); both keep every
+    component connected and never join two components, and their common
+    fixpoint is a star forest in which every node points at its
+    component's minimum. The paper proves O(log² n) rounds and observes
+    O(log n) whatever the diameter (a 512-node chain: 10 rounds), where
+    min-label propagation needs O(diameter) sweeps. Round 0's small-star
+    on the raw pairs is
+    the min-neighbour contraction: a near-clique collapses to a star in
+    that one pass (the sf0.1 blocked-ER graph: 3.1 M edges → one
+    pointer per node), so dense dedup graphs finish in round 0, and
+    later rounds only ever see the contracted edge set.
 
-    Modes:
-    - adaptive (default, ``n_sweeps=None``): sweeps until no label
-      changes; if ``max_iter`` sweeps exhaust before convergence (a
-      diameter-``max_iter`` chain would otherwise return silently-wrong
-      partial labels — ADVICE r2), RAISES RuntimeError, or — with
-      ``on_nonconvergence="star"`` — restarts on the O(log n)
-      large-star/small-star variant, so a pathological high-diameter
-      corpus degrades to the right algorithm instead of failing
-      mid-pipeline (VERDICT r4 item 8).
-    - fixed (``n_sweeps=k``): exactly k sweeps with NO per-sweep driver
-      action — the 100 TB posture when the diameter bound is known (LSH
-      dedup cliques: 3 is plenty). A single end-of-run convergence check
-      still raises on an undershot bound; pass
-      ``verify_converged=False`` to skip even that (pure pipeline mode,
-      zero correctness actions).
-
-    Scale posture: each sweep is one shuffle join (edges ⨝ labels on the
-    dst) + one groupBy(src) min — both partition on ids, both map-side
-    combined. Checkpointing truncates the growing lineage so plan size
-    stays constant across sweeps; with ``checkpoint_dir`` set it is a
-    RELIABLE checkpoint (HDFS/object store — survives executor loss, no
-    executor-local storage pressure), otherwise ``localCheckpoint``
-    (fine on local mode / short jobs). For graphs with huge diameter
-    (chains), swap in the large-star/small-star variant; dedup graphs
-    never need it.
-    """
-    if on_nonconvergence not in ("raise", "star"):
-        raise ValueError(
-            f"on_nonconvergence must be 'raise' or 'star', got {on_nonconvergence!r}"
-        )
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _persist(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir is not None else df.localCheckpoint(eager=True)
-
-    # materialize the directed pairs BEFORE the symmetrizing union: its
-    # two legs are planned independently, so a lazy (possibly expensive)
-    # upstream pair plan would execute twice inside the edges
-    # materialization — the same double-evaluation min_neighbor_contract
-    # fixed (r12); the union then reads the checkpoint twice, cheaply
-    raw = _persist(pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
-    edges = raw.union(
-        raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    edges = _persist(edges)
-
-    labels = _persist(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
+    Cost: one round = two map-side-combined aggregations (one shuffle
+    each) and ONE eager checkpoint. The round's convergence count rides
+    on ``DataFrame.observe`` of the large-star aggregation, so no round
+    runs a separate count/first action (only its zero-ness is read, so
+    a reliable checkpoint re-evaluating the plan cannot mislead it), and
+    because it tests the large-star's input, the round that sees zero is
+    the last one. The
+    lazy ``pairs`` plan is read once, by round 0, in a single leg. With
+    ``checkpoint_dir`` each round is a reliable checkpoint, otherwise a
+    local one. The converged state holds exactly one (node, root) row
+    per node, so the result is that checkpoint, renamed — no further
+    shuffle."""
+    edges = pairs.where(F.col(id_a).isNotNull() & F.col(id_b).isNotNull()).select(
+        F.greatest(id_a, id_b).alias("src"), F.least(id_a, id_b).alias("dst")
     )
-
-    def sweep(labels: DataFrame, with_changed: bool) -> DataFrame:
-        neigh = (
-            edges.join(
-                labels.select(F.col("id").alias("dst"), F.col("component").alias("nc")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nc").alias("nbr_min"))
-            .select(F.col("src").alias("id"), "nbr_min")
-        )
-        out = labels.join(neigh, "id", "left")
-        new_component = F.least(
-            F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-        ).alias("component")
-        if with_changed:
-            return out.select(
-                "id",
-                new_component,
-                (F.coalesce(F.col("nbr_min"), F.col("component")) < F.col("component")).alias(
-                    "__changed"
-                ),
-            )
-        return out.select("id", new_component)
-
-    if n_sweeps is not None:
-        for _ in range(n_sweeps):
-            labels = _persist(sweep(labels, with_changed=False))
-        if verify_converged:
-            n_changed = (
-                sweep(labels, with_changed=True).filter(F.col("__changed")).count()
-            )
-            if n_changed:
-                raise RuntimeError(
-                    f"connected_components: {n_changed} labels still changing after "
-                    f"n_sweeps={n_sweeps} fixed sweeps — component diameter exceeds "
-                    "the sweep bound; raise n_sweeps or use adaptive mode"
-                )
-        return labels
-
-    n_changed = -1
-    for _ in range(max_iter):
-        updated = _persist(sweep(labels, with_changed=True))
-        n_changed = updated.filter(F.col("__changed")).count()
-        labels = updated.drop("__changed")
-        if n_changed == 0:
-            break
-    if n_changed:
-        if on_nonconvergence == "star":
-            # high-diameter graph: min-label's O(diameter) bound lost;
-            # restart with the O(log n) star contraction (same contract)
-            return connected_components_star(
-                pairs, id_a, id_b, checkpoint_dir=checkpoint_dir
-            )
-        raise RuntimeError(
-            f"connected_components: not converged after max_iter={max_iter} sweeps "
-            f"({n_changed} labels still changing) — component diameter exceeds the "
-            "sweep budget; raise max_iter, use the large-star/small-star variant, "
-            'or pass on_nonconvergence="star" to fall back automatically'
-        )
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 50,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components via large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the HIGH-DIAMETER fallback documented on
-    ``connected_components``: converges in O(log n) rounds regardless of
-    component shape, where min-label propagation needs O(diameter)
-    sweeps (a 10M-node chain: ~24 rounds vs 10M sweeps).
-
-    Same contract as ``connected_components``: returns (id, component =
-    smallest reachable id); nodes absent from ``pairs`` are absent from
-    the output. Prefer min-label for LSH dedup cliques (diameter 2-3,
-    cheaper per-sweep); use THIS for arbitrary graphs — citation chains,
-    user-session stitching, web link graphs.
-
-    Each round is two shuffle stages:
-    - large-star: every node points its LARGER neighbors at its current
-      minimum (keeps the graph connected, shrinks tall trees);
-    - small-star: every node and its smaller neighbors collapse onto
-      their minimum (forms stars).
-    Convergence = the edge set's (set-invariant) hash checksum repeats —
-    ONE tiny driver action per round, O(1) rows collected. Lineage is
-    truncated per round (reliable checkpoint when ``checkpoint_dir`` is
-    given, localCheckpoint otherwise)."""
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _persist(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir is not None else df.localCheckpoint(eager=True)
-
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
+    for _ in range(_MAX_CC_ROUNDS):
+        unsettled = Observation()
+        edges = _persist(_large_star(_small_star(edges), unsettled), checkpoint_dir)
+        if unsettled.get["n"] == 0:
+            return edges.select(F.col("src").alias("id"), F.col("dst").alias("component"))
+    raise RuntimeError(
+        f"connected_components: no star-forest fixpoint after {_MAX_CC_ROUNDS} "
+        "rounds — star rounds converge in O(log n), so this is a defect"
     )
-    edges = _persist(edges)
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        mins = sym.groupBy("src").agg(F.least(F.min("dst"), F.col("src")).alias("m"))
-        return (
-            sym.join(mins, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient toward the larger endpoint: src > dst
-        oriented = e.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        ).distinct()
-        mins = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = oriented.join(mins, "src")
-        return (
-            joined.where(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(mins.select(F.col("src"), F.col("m").alias("dst")))
-            .distinct()
-        )
-
-    prev_sig = None
-    for _ in range(max_rounds):
-        edges = _persist(small_star(large_star(edges)))
-        sig = edges.agg(
-            # xor-fold: order/partitioning-invariant over the distinct
-            # edge set and immune to ANSI long-sum overflow
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        sig = (sig["h"], sig["n"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star: edge set still changing after "
-            f"max_rounds={max_rounds} — pathological input (should converge in "
-            "O(log n) rounds); raise max_rounds"
-        )
-
-    # converged: every edge is (node -> its component min); roots appear
-    # only on the dst side
-    return (
-        edges.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-        .union(edges.select(F.col("dst").alias("id"), F.col("dst").alias("component")))
-        .distinct()
-    )
-
-
-def min_neighbor_contract(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """ONE component-preserving contraction pass: every node v merges
-    into ``m(v) = min(v, min neighbor of v)``. Returns ``(mapping,
-    contracted)`` where mapping is (id, m) for every node in ``pairs``
-    and contracted is the (id_a < id_b, distinct) edge list between the
-    surviving representatives, self-loops dropped.
-
-    Why it is safe: v is contracted along one of its OWN edges (m(v) is
-    v itself or a neighbor), so merging never joins two different
-    components; and the minimum node w of any component keeps m(w) = w
-    (all its neighbors are larger), so the component's canonical label
-    survives as its own representative — downstream CC on ``contracted``
-    still returns min-id labels, and ``label(v) = label(m(v))`` recovers
-    the full answer exactly.
-
-    Why it is worth a pass: dense near-clique graphs (blocked fuzzy
-    match, LSH-verified dup clusters) collapse catastrophically — a
-    clique contracts to ZERO edges, so the iterative sweeps that would
-    otherwise re-shuffle every edge per round run on a graph orders of
-    magnitude smaller (measured on the sf0.1 blocked-ER graph: 3.1M
-    edges -> 0 edges in one pass; 14.7 s adaptive CC -> 5.5 s
-    contract+CC, identical labels). Cost: one groupBy-min over the
-    symmetric edges + two id-partitioned joins + distinct — all
-    map-side-combinable, nothing iterative, nothing on the driver.
-    """
-
-    def _persist(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    # Materialize the DIRECTED pair list BEFORE symmetrizing: a union's
-    # two legs are planned independently (only broadcast/shuffle
-    # exchanges are reused), so union-then-persist ran the (possibly
-    # expensive) upstream pair plan TWICE inside the one materialization
-    # — measured on the sf0.1 blocked-levenshtein ER graph: the sym
-    # materialization cost 5.0 s against 2.8 s for the pair plan itself;
-    # checkpoint-then-union reads the checkpoint twice instead (3.0 s).
-    # sym itself is no longer persisted: both its readers (the mapping
-    # groupBy, the contracted-edges join) now re-derive it from the raw
-    # checkpoint with two cheap scans each.
-    raw = _persist(pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
-    # symmetrize BEFORE the self-loop filter: the node set (mapping
-    # keys) must include nodes that appear only in self-pairs (a, a) —
-    # filtering first would drop them from the mapping and break the
-    # "same output rows as connected_components" contract (plain CC
-    # keeps them as singletons).
-    sym = raw.union(raw.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    edges = sym.where(F.col("src") != F.col("dst"))
-    # min over dst INCLUDING a possible self-loop is harmless:
-    # least(id, min(dst ∪ {id})) == least(id, min(dst \ {id})), and for a
-    # self-loop-only node min(dst) = id, so m = id — the isolated
-    # singleton survives with itself as representative.
-    mapping = _persist(
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("nbr_min"))
-        .select(F.col("src").alias("id"), F.least("id", "nbr_min").alias("m"))
-    )
-    contracted = _persist(
-        edges.join(mapping.select(F.col("id").alias("src"), F.col("m").alias("__ma")), "src")
-        .join(mapping.select(F.col("id").alias("dst"), F.col("m").alias("__mb")), "dst")
-        .where(F.col("__ma") != F.col("__mb"))
-        .select(
-            F.least("__ma", "__mb").alias(id_a),
-            F.greatest("__ma", "__mb").alias(id_b),
-        )
-        .distinct()
-    )
-    return mapping, contracted
-
-
-def connected_components_contracted(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
-    **cc_kwargs,
-) -> DataFrame:
-    """``connected_components`` with a ``min_neighbor_contract`` pre-pass
-    — same (id, component = smallest reachable id) contract, same output
-    rows, built for DENSE pair graphs where the plain iterative sweeps
-    would re-shuffle millions of clique edges per round. If the single
-    contraction already collapses every component (the near-clique case:
-    contracted edge set is EMPTY), the iterative machinery is skipped
-    entirely and the mapping IS the answer; otherwise CC runs on the
-    (much smaller) contracted graph and labels are joined back through
-    the mapping. ``cc_kwargs`` pass through to ``connected_components``
-    (n_sweeps / on_nonconvergence / ...)."""
-    mapping, contracted = min_neighbor_contract(
-        pairs, id_a, id_b, checkpoint_dir=checkpoint_dir
-    )
-    if contracted.isEmpty():
-        return mapping.select("id", F.col("m").alias("component"))
-    labels = connected_components(
-        contracted, id_a, id_b, checkpoint_dir=checkpoint_dir, **cc_kwargs
-    )
-    return mapping.join(
-        labels.select(F.col("id").alias("m"), F.col("component").alias("__c")),
-        "m",
-        "left",
-    ).select("id", F.coalesce("__c", F.col("m")).alias("component"))
 
 
 def dedup_by_components(

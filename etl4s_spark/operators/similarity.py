@@ -305,16 +305,16 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("__vb")
     ).withColumn("__nb", l2_norm(F.col("__vb")))
     right = F.broadcast(b) if broadcast_right else b
-    return (
-        a.join(right, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
+    # The cosine goes LAST in an explicit ON clause: Catalyst keeps the
+    # conjunct order there, while a post-join ``cos_sim >= threshold``
+    # filter merges into the join condition IN FRONT of ``id_a < id_b``
+    # and scores all n² row pairs instead of the n(n−1)/2 ordered ones.
+    # The projection re-scores only the surviving pairs.
+    cos = F.round(
+        dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
+    )
+    return a.join(right, (F.col("id_a") < F.col("id_b")) & (cos >= threshold)).select(
+        "id_a", "id_b", cos.alias("cos_sim")
     )
 
 
@@ -1258,20 +1258,19 @@ def semdedup(
         F.col("__v").alias("__vb"),
         F.col("__n").alias("__nb"),
     )
+    # cheapest test first in the ON clause (cell key, then id order, the
+    # cosine last) — the same conjunct-order discipline as
+    # embedding_neardup_pairs
+    cos = F.round(
+        dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
+    )
     dups = (
         a.join(
             b,
-            (F.col("__ca") == F.col("__cb")) & (F.col("id_a") < F.col("id_b")),
+            (F.col("__ca") == F.col("__cb"))
+            & (F.col("id_a") < F.col("id_b"))
+            & (cos >= threshold),
         )
-        .select(
-            "id_b",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("__cos"),
-        )
-        .filter(F.col("__cos") >= threshold)
         .select(F.col("id_b").alias("__dup_id"))
         .distinct()
     )

@@ -603,30 +603,22 @@ def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline's final stage: near-dup PAIRS → connected-
-    component CLUSTERS (iterative min-label propagation,
-    operators/dedup.py connected_components) so one canonical doc per
-    cluster survives. The oracle computes the same components with a
-    recursive-CTE transitive closure — feasible for DuckDB at the checked
-    scale, while the Spark formulation (O(diameter) shuffle sweeps with
-    checkpointed lineage) is the one that survives 100 TB.
-
-    Sweep policy: adaptive (stop at the first no-change sweep). Measured
-    against fixed n_sweeps=3 + end-check on this graph: adaptive wins
-    (7.8 s vs 6.8 s at sf0.1) because near-dup graphs converge in 2
-    sweeps — a fixed bound can only match that by guessing the exact
-    diameter, and overshooting pays a full extra sweep. Fixed mode stays
-    the right call when per-sweep driver actions are the bottleneck
-    (wide clusters, thousands of sweeps of tiny data — not this shape).
-    Nonconvergence policy: on_nonconvergence="star" — a pathological
-    high-diameter corpus degrades to the O(log n) star contraction
-    (same (id, component) contract) instead of raising mid-pipeline."""
+    component CLUSTERS (operators/dedup.py connected_components:
+    alternating small-star/large-star rounds, convergence observed on
+    each round's checkpoint) so one canonical doc per cluster survives.
+    The oracle computes the same components with a recursive-CTE
+    transitive closure — feasible for DuckDB at the checked scale, while
+    the Spark formulation (O(log n) two-shuffle rounds with checkpointed
+    lineage) is the one that survives 100 TB. This near-dup graph is
+    sparse little trees, not cliques: round 0 leaves a few edges, and
+    the routine finishes in 2-3 rounds."""
     from etl4s_spark.operators.dedup import connected_components
 
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
     pairs = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.4).select(
         "id_a", "id_b"
     )
-    return connected_components(pairs, on_nonconvergence="star").orderBy("id")
+    return connected_components(pairs).orderBy("id")
 
 
 @query(
@@ -652,20 +644,19 @@ def q_dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering contract as q_dedup_cluster_canonical, computed
-    by the LARGE-STAR/SMALL-STAR algorithm (operators/dedup.py
-    connected_components_star) instead of min-label propagation — the
-    driver gate proves BOTH component implementations against the same
-    transitive-closure oracle. Star contraction is the O(log n)-rounds
-    variant for graphs whose diameter is not bounded (chains, link
-    graphs); min-label stays the default for dedup cliques."""
-    from etl4s_spark.operators.dedup import connected_components_star
+    """Same clustering contract as q_dedup_cluster_canonical, declared
+    separately since the large-star/small-star algorithm was a second
+    implementation. Both now run the single operators/dedup.py
+    connected_components, whose rounds ARE large-star/small-star: O(log
+    n) rounds whatever the diameter, so the same routine serves dedup
+    cliques and chains or link graphs alike."""
+    from etl4s_spark.operators.dedup import connected_components
 
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
     pairs = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.4).select(
         "id_a", "id_b"
     )
-    return connected_components_star(pairs).orderBy("id")
+    return connected_components(pairs).orderBy("id")
 
 
 @query("q_sim_ann_ivf")  # approximate; recall vs brute force asserted in pytest
@@ -2114,14 +2105,15 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     very different from many pairs): components → per-component size →
     histogram of sizes with doc mass. At 100 TB the histogram is what
     you alert on before trusting a dedup run; it costs two
-    low-cardinality aggregations past the component labels."""
-    from etl4s_spark.operators.dedup import connected_components_contracted
+    low-cardinality aggregations past the component labels, which
+    connected_components returns as its last round's checkpoint."""
+    from etl4s_spark.operators.dedup import connected_components
 
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
     pairs = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.4).select(
         "id_a", "id_b"
     )
-    comp = connected_components_contracted(pairs)
+    comp = connected_components(pairs)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         sizes.groupBy(F.col("cluster_size").cast("int").alias("cluster_size"))

@@ -450,19 +450,18 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_er_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END entity resolution: blocked fuzzy match (edit distance
     ≤ 2 within first-token blocks — q_fuzzy_pairs' candidate
-    discipline) feeds CONNECTED COMPONENTS (operators/dedup.py — the
-    same iterative min-label machinery the dedup clusters use), and
+    discipline) feeds CONNECTED COMPONENTS (operators/dedup.py
+    connected_components — the routine the dedup clusters use), and
     each cluster elects its minimum key as the canonical entity — the
     full match→cluster→survivorship flow of an MDM pipeline in one
     declared query, with the oracle replaying it as a recursive CTE.
 
     The blocked match graph is DENSE (near-cliques per block: 3.1M edges
-    over 20k parts at sf0.1), so clustering goes through the
-    min-neighbor contraction pre-pass (operators/dedup.py
-    min_neighbor_contract) — one shuffle collapses the cliques, the
-    iterative sweeps run only on the (usually empty) residue. Measured
-    at sf0.1: 14.7 s plain adaptive CC -> ~4 s, identical labels."""
-    from etl4s_spark.operators.dedup import connected_components_contracted
+    over 20k parts at sf0.1). connected_components' round 0 is a
+    min-neighbour contraction that collapses each near-clique to a star
+    and observes convergence in the same round: at sf0.1 the clustering
+    is that one round, two shuffles over the 3.1M edges."""
+    from etl4s_spark.operators.dedup import connected_components
 
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("blk")
@@ -492,7 +491,7 @@ def q_er_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("a.p_partkey").alias("id_a"), F.col("b.p_partkey").alias("id_b")
     )
-    comp = connected_components_contracted(pairs)
+    comp = connected_components(pairs)
     return (
         comp.groupBy(F.col("component").alias("cluster_id"))
         .agg(

@@ -89,9 +89,8 @@ def test_minhash_pair_cap_bounds_mega_cluster(spark):
     before r11 and still exactly that at the c=1 floor) — with a
     non-zero truncated audit, while connected components over the
     capped pairs equal components over the exhaustive pairs (every
-    member stays adjacent to the hub → diameter ≤ 2, so min-label CC
-    converges exactly as before)."""
-    from etl4s_spark.operators.dedup import connected_components_contracted
+    member stays adjacent to the hub → diameter ≤ 2)."""
+    from etl4s_spark.operators.dedup import connected_components
 
     g = 200
     rows = [(i, BASE) for i in range(g)] + [
@@ -120,11 +119,11 @@ def test_minhash_pair_cap_bounds_mega_cluster(spark):
     ).select("id_a", "id_b")
     comp_capped = {
         (r.id, r.component)
-        for r in connected_components_contracted(cap_df).collect()
+        for r in connected_components(cap_df).collect()
     }
     comp_full = {
         (r.id, r.component)
-        for r in connected_components_contracted(
+        for r in connected_components(
             uncapped.select("id_a", "id_b")
         ).collect()
     }
@@ -149,10 +148,7 @@ def test_capped_funnel_semantics(spark):
         the uncapped funnel's (a documented lower bound, never a wrong
         pair), and surviving scores equal the uncapped scores exactly.
     """
-    from etl4s_spark.operators.dedup import (
-        connected_components_contracted,
-        dedup_funnel,
-    )
+    from etl4s_spark.operators.dedup import connected_components, dedup_funnel
 
     g = 30
     rows = [(i, BASE) for i in range(g)] + [
@@ -170,7 +166,7 @@ def test_capped_funnel_semantics(spark):
     assert uncapped_cands.count() == g * (g - 1) // 2
     comp = lambda df: {  # noqa: E731
         (r.id, r.component)
-        for r in connected_components_contracted(df.select("id_a", "id_b")).collect()
+        for r in connected_components(df.select("id_a", "id_b")).collect()
     }
     assert comp(capped_cands) == comp(uncapped_cands)
 
@@ -223,7 +219,7 @@ def test_embedding_lsh_pair_cap_default_binds_mega_cluster(spark):
     (e) a 24-vector cluster (the test-SF regime: g < 129) stays
         EXHAUSTIVE under the default — the cap must not bind where the
         oracles run."""
-    from etl4s_spark.operators.dedup import connected_components_contracted
+    from etl4s_spark.operators.dedup import connected_components
     from etl4s_spark.operators.similarity import embedding_neardup_lsh
 
     g = 135
@@ -262,7 +258,7 @@ def test_embedding_lsh_pair_cap_default_binds_mega_cluster(spark):
 
     comp = lambda pairs: {  # noqa: E731
         (r.id, r.component)
-        for r in connected_components_contracted(
+        for r in connected_components(
             spark.createDataFrame(
                 [(a, b) for a, b in pairs], "id_a bigint, id_b bigint"
             )
@@ -507,88 +503,78 @@ def test_connected_components_and_canonical_dedup(spark):
     assert set(ccomp.values()) == {10} and len(ccomp) == 11
 
 
-def test_connected_components_contracted(spark):
-    """min_neighbor_contract + contracted CC return bit-identical labels
-    to plain connected_components on every graph shape: cliques (the
-    dense case the contraction exists for — contracts to ZERO edges and
-    skips the iterative machinery), chains (residue left → iterative CC
-    runs on the contracted graph), and mixtures."""
-    from etl4s_spark.operators.dedup import (
-        connected_components,
-        connected_components_contracted,
-        min_neighbor_contract,
-    )
+def _cc_labels(df):
+    """connected_components as {id: component}, asserting its one-row-
+    per-node contract on the way."""
+    from etl4s_spark.operators.dedup import connected_components
 
+    rows = connected_components(df).collect()
+    labels = {r.id: r.component for r in rows}
+    assert len(labels) == len(rows), "a node appears in more than one row"
+    return labels
+
+
+def _count_jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_contracted(spark):
+    """connected_components' round-0 min-neighbour contraction gives
+    exact min-id labels on every graph shape: cliques (the dense case it
+    exists for — a clique collapses to a star in round 0, so the routine
+    stops after that one round), cliques joined by a bridge, chains
+    (residue left → later star rounds finish the job), isolated pairs
+    and self-loop-only nodes."""
     # clique {1,2,3} + clique {5,6,7} + bridge 3-5 + isolated pair 10-11
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (5, 6), (6, 7), (5, 7), (3, 5), (10, 11)],
         "id_a long, id_b long",
     )
-    plain = {r.id: r.component for r in connected_components(pairs).collect()}
-    contracted = {
-        r.id: r.component for r in connected_components_contracted(pairs).collect()
-    }
-    assert contracted == plain
-    assert set(plain.values()) == {1, 10}
+    got = _cc_labels(pairs)
+    assert got == {1: 1, 2: 1, 3: 1, 5: 1, 6: 1, 7: 1, 10: 10, 11: 10}
 
-    # pure clique: one pass collapses everything (contracted edges empty)
+    # pure clique: round 0 collapses everything and observes convergence
+    # — one round is two aggregation shuffles plus the checkpoint's
+    # result job; the collect is the fourth job
     clique = spark.createDataFrame(
         [(a, b) for a in range(30, 36) for b in range(a + 1, 36)],
         "id_a long, id_b long",
     )
-    mapping, residue = min_neighbor_contract(clique)
-    assert residue.count() == 0
-    assert {r.id: r.m for r in mapping.collect()} == {i: 30 for i in range(30, 36)}
-    cl = {r.id: r.component for r in connected_components_contracted(clique).collect()}
+    cl, n_jobs = _count_jobs(spark, "cc_clique", lambda: _cc_labels(clique))
     assert cl == {i: 30 for i in range(30, 36)}
+    assert n_jobs <= 4, n_jobs
 
-    # long chain: contraction halves it, iterative CC finishes the job
+    # long chain: the contraction leaves a residue, star rounds finish it
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40, 52)], "id_a long, id_b long"
     )
-    cc = {r.id: r.component for r in connected_components_contracted(chain).collect()}
+    cc = _cc_labels(chain)
     assert set(cc.values()) == {40} and len(cc) == 13
 
-    # cc_kwargs pass through (fixed sweeps on the contracted graph)
-    fixed = {
-        r.id: r.component
-        for r in connected_components_contracted(
-            pairs, n_sweeps=3, verify_converged=False
-        ).collect()
-    }
-    assert fixed == plain
-
     # self-loop-only nodes (ADVICE r6): a node appearing only as (a, a)
-    # must survive as a singleton — plain CC keeps it, the contraction's
-    # node mapping must too (the self-loop filter used to drop it)
+    # survives as a singleton; a self-loop next to real edges is inert
     loops = spark.createDataFrame(
         [(60, 61), (61, 62), (70, 70), (60, 60)], "id_a long, id_b long"
     )
-    plain_l = {r.id: r.component for r in connected_components(loops).collect()}
-    contr_l = {
-        r.id: r.component for r in connected_components_contracted(loops).collect()
-    }
-    assert contr_l == plain_l
-    assert contr_l[70] == 70 and contr_l[60] == 60
+    assert _cc_labels(loops) == {60: 60, 61: 60, 62: 60, 70: 70}
 
 
 def test_connected_components_random_graphs_vs_union_find(spark):
-    """Fixed-seed random graphs across the density spectrum: plain
-    min-label CC, the contraction pre-pass variant, AND the
-    large-star/small-star variant all match an independent pure-Python
-    union-find computing min-id labels. Two Spark formulations agreeing
-    can share a bug (the SURVEY §5.2 mirrored-oracle lesson); the
-    union-find cannot — it shares no code, no shuffle, no label-sweep
-    structure with any of them. Duplicate and reversed edges are
-    injected deliberately: real pair generators (LSH bands, blocked
-    fuzzy match) emit both."""
+    """Fixed-seed random graphs across the density spectrum:
+    connected_components matches an independent pure-Python union-find
+    computing min-id labels. The union-find shares no code, no shuffle
+    and no round structure with the Spark routine (the SURVEY §5.2
+    mirrored-oracle lesson). Duplicate and reversed edges are injected
+    deliberately: real pair generators (LSH bands, blocked fuzzy match)
+    emit both."""
     import random
-
-    from etl4s_spark.operators.dedup import (
-        connected_components,
-        connected_components_contracted,
-        connected_components_star,
-    )
 
     def uf_min_labels(edges):
         parent = {}
@@ -619,7 +605,8 @@ def test_connected_components_random_graphs_vs_union_find(spark):
             [(a, b) for a in range(n) for b in range(a + 1, n) if rng.random() < p]
         )
     # adversarial mixture: two cliques joined by a bridge, a 15-chain,
-    # and scattered pairs — the shapes the three algorithms trade off on
+    # and scattered pairs — the shapes contraction and star rounds
+    # each handle differently
     mix = [(a, b) for a in range(100, 106) for b in range(a + 1, 106)]
     mix += [(a, b) for a in range(200, 206) for b in range(a + 1, 206)]
     mix += [(105, 200)]
@@ -633,53 +620,27 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         noisy = edges + [(b, a) for a, b in edges[:: max(1, len(edges) // 7)]]
         noisy += edges[:: max(1, len(edges) // 5)]
         pairs = spark.createDataFrame(noisy, "id_a long, id_b long")
-        for name, got_df in [
-            ("plain", connected_components(pairs)),
-            ("contracted", connected_components_contracted(pairs)),
-            ("star", connected_components_star(pairs)),
-        ]:
-            got = {r.id: r.component for r in got_df.collect()}
-            assert got == want, f"graph {gi} via {name} diverges from union-find"
+        assert _cc_labels(pairs) == want, f"graph {gi} diverges from union-find"
 
 
 def test_connected_components_modes(spark, tmp_path):
-    """Fixed-sweep / reliable-checkpoint / non-convergence contract
-    (VERDICT r2 item 5, ADVICE r2 medium)."""
+    """Job ceiling and reliable-checkpoint contract (VERDICT r2 item 5).
+    Every round is one eager checkpoint whose convergence count rides on
+    DataFrame.observe, so two cliques + a bridge (diameter 3) cost a
+    fixed job budget: three rounds of (two shuffles + the checkpoint's
+    result job) and the collect — 10 jobs, where the min-label sweeps
+    this routine replaced ran 24. A per-round count() or first() would
+    push it past the ceiling."""
     from etl4s_spark.operators.dedup import connected_components
 
-    # two cliques + a bridge: diameter 2 → converges in <= 3 sweeps
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (10, 11)],
         "id_a long, id_b long",
     )
-    adaptive = {r.id: r.component for r in connected_components(pairs).collect()}
-
-    # fixed-sweep mode: identical labels, fewer driver actions
-    sc = spark.sparkContext
-    sc.setJobGroup("cc_fixed", "fixed sweeps")
-    fixed = {
-        r.id: r.component
-        for r in connected_components(
-            pairs, n_sweeps=3, verify_converged=False
-        ).collect()
-    }
-    n_fixed_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_fixed"))
-    sc.setJobGroup("cc_adaptive", "adaptive sweeps")
-    connected_components(pairs).collect()
-    n_adaptive_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_adaptive"))
-    sc.setJobGroup(None, None)
-    assert fixed == adaptive
-    # each adaptive sweep = checkpoint job + count job; fixed skips every
-    # per-sweep count → strictly fewer driver actions for the same sweeps
-    assert n_fixed_jobs < n_adaptive_jobs
-
-    # fixed mode with verification catches an undershot sweep bound
-    chain = spark.createDataFrame([(i, i + 1) for i in range(20, 28)], "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="diameter exceeds"):
-        connected_components(chain, n_sweeps=2)
-    # adaptive mode raises instead of returning partial labels
-    with pytest.raises(RuntimeError, match="not converged"):
-        connected_components(chain, max_iter=2)
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 10: 10, 11: 10}
+    labels, n_jobs = _count_jobs(spark, "cc_jobs", lambda: _cc_labels(pairs))
+    assert labels == want
+    assert n_jobs <= 10, n_jobs
 
     # reliable checkpoint mode: same labels, files land in checkpoint_dir
     ckpt = str(tmp_path / "cc_ckpt")
@@ -687,41 +648,55 @@ def test_connected_components_modes(spark, tmp_path):
         r.id: r.component
         for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
     }
-    assert reliable == adaptive
+    assert reliable == want
     import os
 
     assert any(os.scandir(ckpt))
 
 
 def test_connected_components_star_matches_minlabel(spark):
-    """Large-star/small-star converges to the same (id → min reachable)
-    labels as min-label propagation, and handles high-diameter chains
-    where the sweep budget of min-label is exhausted."""
+    """The star rounds converge to the same (id → min reachable) labels
+    as min-label propagation (run here in pure Python to its fixpoint),
+    and handle a high-diameter chain without any sweep budget."""
     import random
 
-    from etl4s_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    def min_label(edges):
+        label = {n: n for e in edges for n in e}
+        changed = True
+        while changed:
+            changed = False
+            for a, b in edges:
+                m = min(label[a], label[b])
+                if label[a] != m or label[b] != m:
+                    label[a] = label[b] = m
+                    changed = True
+        return label
 
     rnd = random.Random(13)
     # random sparse graph: 60 nodes, 50 edges → several components
     edges = [(rnd.randrange(60), rnd.randrange(60)) for _ in range(50)]
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    star = {r.id: r.component for r in connected_components_star(pairs).collect()}
-    minl = {r.id: r.component for r in connected_components(pairs).collect()}
-    assert star == minl
+    assert _cc_labels(pairs) == min_label(edges)
 
-    # 40-node chain (diameter 39): min-label with a 5-sweep budget
-    # raises; star converges well inside its default round budget
+    # 40-node chain (diameter 39)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 140)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError):
-        connected_components(chain, max_iter=5)
-    labels = {r.id: r.component for r in connected_components_star(chain).collect()}
+    labels = _cc_labels(chain)
     assert set(labels.values()) == {100} and len(labels) == 41
+
+
+def test_connected_components_long_chain_job_bound(spark):
+    """A 512-node chain — diameter 511, the worst case for min-label
+    propagation (one sweep per hop) — returns exact labels in O(log n)
+    star rounds: under 200 Spark jobs in total."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(511)], "id_a long, id_b long"
+    )
+    labels, n_jobs = _count_jobs(spark, "cc_chain", lambda: _cc_labels(chain))
+    assert labels == {i: 0 for i in range(512)}
+    assert n_jobs < 200, n_jobs
 
 
 def test_asof_join_tie_fill_is_atomic(spark):

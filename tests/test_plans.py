@@ -425,3 +425,41 @@ def test_literal_group_quartiles_window_stays_partitioned(spark, sf_dir):
     # and the result is still the single-group quartile row
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["n"] == 500
+
+
+def _join_condition(df) -> str:
+    """The condition of the first Join in ``df``'s optimized plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return next(line for line in plan.splitlines() if "Join Inner" in line)
+
+
+def _ordered(cond: str, *patterns: str) -> bool:
+    """Each regex first matches ``cond`` after the previous one."""
+    import re
+
+    spots = [re.search(p, cond) for p in patterns]
+    return all(spots) and [m.start() for m in spots] == sorted(m.start() for m in spots)
+
+
+def test_pair_joins_test_ids_before_expensive_score(spark, sf_dir):
+    """The pair joins author their ON clause cheapest-first and Catalyst
+    keeps that order, so the interpreted cosine (embedding_neardup_pairs,
+    semdedup) and the banded levenshtein DP (q_fuzzy_pairs, ADVICE r13)
+    run only on pairs that passed the cell-key / id-order tests. A
+    post-join filter on the score would merge into the join condition
+    AHEAD of ``id_a < id_b`` and score every row pair."""
+    from etl4s_spark.operators.similarity import embedding_neardup_pairs, semdedup
+    from etl4s_spark.queries import QUERIES, load_all
+
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
+    ids, cos = r"\(id_a#\d+L? < id_b#\d+L?\)", r"round\(\(aggregate"
+    cond = _join_condition(embedding_neardup_pairs(e, "vec_id", "embedding", 0.4))
+    assert _ordered(cond, ids, cos), cond
+    cond = _join_condition(semdedup(e, "vec_id", "embedding", n_clusters=8))
+    assert _ordered(cond, r"\(__ca#\d+ = __cb#\d+\)", ids, cos), cond
+
+    load_all()
+    cond = _join_condition(QUERIES["q_fuzzy_pairs"](spark, sf_dir))
+    assert _ordered(
+        cond, r"\(p_partkey#\d+L? < p_partkey#\d+L?\)", r"levenshtein\("
+    ), cond

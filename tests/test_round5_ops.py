@@ -71,24 +71,6 @@ def test_versioned_upsert_chain_gap_raises(spark, tmp_path):
         versioned_upsert_batch(spark, base, b, 3, _upsert_merge_fn)
 
 
-def test_connected_components_star_fallback_on_chain(spark):
-    """A diameter-40 chain cannot converge in max_iter=3 min-label
-    sweeps: default policy raises; on_nonconvergence='star' silently
-    degrades to the O(log n) star contraction and still returns the
-    exact single-component labeling."""
-    from etl4s_spark.operators.dedup import connected_components
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="not converged"):
-        connected_components(chain, max_iter=3)
-
-    labels = connected_components(chain, max_iter=3, on_nonconvergence="star")
-    got = {r.id: r.component for r in labels.collect()}
-    assert got == {i: 0 for i in range(41)}
-
-
 def test_frame_sample_matches_driver_side_decode(spark):
     """frame_sample's distributed container walk + BMP decode emits
     exactly the frames a driver-side decode of the same container

@@ -446,23 +446,86 @@ def test_kcore_empty_when_graph_too_sparse(spark):
     assert k_core(df, k=3).count() == 0
 
 
+CHAIN_LEN = 8  # planted peel depth — every scale needs exactly this many rounds
+
+
+def _planted_cascade_edges(spark, n_edges: int):
+    """Planted 3-core graph whose peel CASCADES for CHAIN_LEN rounds at
+    every scale (VERDICT r10 item 4: a pseudo-random multigraph's 3-core
+    collapses in ONE round, so it never exercises multi-round peeling).
+    Built from spark.range only:
+    - CORE: n_core nodes in a circulant graph, node c adjacent to
+      c±1, c±2 (mod n_core) — distinct-degree 4 ≥ 3, survives any peel.
+    - CHAINS: m triangle-chains of length L=CHAIN_LEN hanging off the
+      core: chain node (j,l) adjacent to (j,l+1) and (j,l+2); the two
+      tail nodes attach into the core (t_{L-1} to two core nodes,
+      t_{L-2} to one). The free end t_0 has degree 2 → peels round 1 →
+      t_1 drops to 2 → peels round 2 → … exactly L rounds, then one
+      fixpoint-confirm round.
+    The 3-core is EXACTLY the n_core circulant nodes. Returns
+    (edges, n_core)."""
+    L = CHAIN_LEN
+    n_core = max(n_edges // 4, 16)
+    m = max(n_edges // (4 * L), 1)
+    c = spark.range(n_core)
+    core_e = c.select(
+        F.col("id").alias("id_a"), ((F.col("id") + 1) % n_core).alias("id_b")
+    ).unionByName(
+        c.select(
+            F.col("id").alias("id_a"), ((F.col("id") + 2) % n_core).alias("id_b")
+        )
+    )
+    ch = spark.range(m * L).select(
+        (F.col("id") / L).cast("long").alias("j"),
+        (F.col("id") % L).alias("l"),
+        (F.col("id") + n_core).alias("node"),
+    )
+    e_next = ch.filter(F.col("l") < L - 1).select(
+        F.col("node").alias("id_a"), (F.col("node") + 1).alias("id_b")
+    )
+    e_skip = ch.filter(F.col("l") < L - 2).select(
+        F.col("node").alias("id_a"), (F.col("node") + 2).alias("id_b")
+    )
+    anchor = (F.col("j") * 2654435761) % n_core
+    tail_a = ch.filter(F.col("l") == L - 1).select(
+        F.col("node").alias("id_a"), anchor.alias("id_b")
+    )
+    tail_b = ch.filter(F.col("l") == L - 1).select(
+        F.col("node").alias("id_a"), ((anchor + 1) % n_core).alias("id_b")
+    )
+    tail_c = ch.filter(F.col("l") == L - 2).select(
+        F.col("node").alias("id_a"), ((anchor + 2) % n_core).alias("id_b")
+    )
+    return (
+        core_e.unionByName(e_next)
+        .unionByName(e_skip)
+        .unionByName(tail_a)
+        .unionByName(tail_b)
+        .unionByName(tail_c)
+        .repartition(32)
+    ), n_core
+
+
 def test_kcore_planted_cascade_generator(spark):
     """The GRAPH_SCALING planted lane's construction contract (VERDICT
-    r10 item 4), pinned at probe-independent small scale: the triangle-
-    chain graph's 3-core peel needs EXACTLY CHAIN_LEN cascade rounds
-    (+1 fixpoint confirm — round_sizes carries the measured counts) and
-    the surviving 3-core is exactly the circulant core. If either
-    drifts, the probe's decade ratios measure the wrong thing."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
+    r10 item 4), pinned at small scale: the triangle-chain graph's
+    3-core peel needs EXACTLY CHAIN_LEN cascade rounds (+1 fixpoint
+    confirm — round_sizes carries the measured counts) and the
+    surviving 3-core is exactly the circulant core. If either drifts,
+    the recorded decade ratios measured the wrong thing. The peel runs
+    no count action: each round is its two eager checkpoints, with the
+    survivor count observed on the first."""
     from etl4s_spark.operators.graph import k_core
-    from tools.graph_scaling_probe import CHAIN_LEN, planted_cascade_edges
 
-    edges, n_core = planted_cascade_edges(spark, 2_000)
+    edges, n_core = _planted_cascade_edges(spark, 2_000)
     rounds: list[int] = []
-    out = k_core(edges, k=3, round_sizes=rounds)
-    rows = out.collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("kcore_cascade", "k_core job budget")
+    try:
+        rows = k_core(edges, k=3, round_sizes=rounds).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("kcore_cascade"))
     assert len(rows) == n_core
     assert {r.id for r in rows} == set(range(n_core))
     assert all(r.core_degree >= 3 for r in rows)
@@ -472,6 +535,10 @@ def test_kcore_planted_cascade_generator(spark):
     assert all(
         a > b for a, b in zip(rounds[: CHAIN_LEN - 1], rounds[1:CHAIN_LEN])
     ), rounds
+    # 41 jobs: 3 for the input edges, 4 per round (two checkpoints of one
+    # shuffle + result each), 2 for the collect. One count() more per
+    # round would reach the ceiling; with a count per round it took 62.
+    assert n_jobs < 5 + 5 * len(rounds), (n_jobs, rounds)
 
 
 def test_kcore_query_sentinel_nonvacuous(spark, sf_dir):

@@ -9,7 +9,9 @@ support a before/after claim.
 
 Usage:
     python tools/probe_queries.py [--sf DIR] [--runs N] q_a q_b ...
-Prints one JSON object {query: {"runs": [...], "warm_median": s}}.
+Prints one JSON object {query: {"runs": [...], "warm_median": s,
+"jobs": [...]}}, where jobs counts the Spark jobs of each run (build
+and execute — eager checkpoints inside the build included).
 """
 
 from __future__ import annotations
@@ -42,18 +44,27 @@ def main() -> None:
             sys.exit(2)
 
     spark.read.parquet(f"{args.sf}/region.parquet").count()
+    sc = spark.sparkContext
     samples: dict[str, list[float]] = {q: [] for q in args.queries}
+    jobs: dict[str, list[int]] = {q: [] for q in args.queries}
     for i in range(args.runs):
         for q in args.queries:
-            spark.sparkContext.setJobDescription(f"probe:{q}:run{i}")
+            group = f"probe:{q}:run{i}"
+            sc.setJobGroup(group, group)
             t0 = time.monotonic()
             df = qs[q](spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             samples[q].append(round(time.monotonic() - t0, 3))
+            jobs[q].append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    sc.setJobGroup(None, None)
     out = {}
     for q, ss in samples.items():
         warm = ss[1:] if len(ss) > 1 else ss
-        out[q] = {"runs": ss, "warm_median": round(statistics.median(warm), 3)}
+        out[q] = {
+            "runs": ss,
+            "warm_median": round(statistics.median(warm), 3),
+            "jobs": jobs[q],
+        }
     print(json.dumps(out, indent=1))
 
 
