@@ -176,6 +176,13 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("__c").over(w_off) - F.col("__c")).alias("__off"),
         F.sum("__c").over(Window.partitionBy("dim")).alias("n_total"),
     )
+    # Invariant: bkt is never NULL, so a plain equi-join on it is safe.
+    # frequency is a count, and TPC-H declares o_orderdate and
+    # o_totalprice NOT NULL, so recency_days and monetary_cents are
+    # non-null for every customer. If either column could hold NULLs, use
+    # the null-safe bucket join of operators/ranking.py global_index:
+    # here a NULL bkt would drop the customer's row for that dimension
+    # and leave its score NULL.
     idxed = ranked.join(F.broadcast(offs), ["dim", "bkt"]).withColumn(
         "idx", (F.col("__rn") + F.col("__off")).cast("long")
     )

@@ -4074,6 +4074,10 @@ def q_audit_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoints and the three separate count() actions collapse into a
     # single job (guide §5: fewer driver round-trips / actions). The
     # final-row arithmetic (Python round) is unchanged bit-for-bit.
+    # Precondition: truth and proposed are each a SET of (id_a, id_b)
+    # pairs (both come out of a groupBy on the pair). The sums below equal
+    # the old count() actions only then; a duplicate pair on either side
+    # fans out in the join and inflates n_truth/n_proposed and hits.
     proposed = _minhash_checkable_pairs(sh).select("id_a", "id_b")
     both = truth.withColumn("__t", F.lit(1)).join(
         proposed.withColumn("__p", F.lit(1)), ["id_a", "id_b"], "full_outer"
@@ -4192,7 +4196,11 @@ def q_audit_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE full-outer join + aggregate instead of two pair checkpoints +
     # three count() actions (r13; same move as q_audit_lsh_recall) —
     # each side is consumed exactly once, the final-row Python
-    # arithmetic is unchanged bit-for-bit
+    # arithmetic is unchanged bit-for-bit. Precondition: truth and
+    # proposed are each a SET of (id_a, id_b) pairs (one row per pair
+    # from embedding_neardup_pairs, and proposed's .distinct()); a
+    # duplicate pair on either side fans out in the join and inflates
+    # the sums, so do not drop that .distinct().
     both = truth.withColumn("__t", F.lit(1)).join(
         proposed.withColumn("__p", F.lit(1)), ["id_a", "id_b"], "full_outer"
     )

@@ -33,7 +33,26 @@ def _stream_parts() -> str:
     independent). A cluster deployment sizes this to key cardinality via
     SPARK_GRAFT_STREAM_SHUFFLE — the local default is NOT a throughput
     setting, it bounds per-batch fixed cost."""
-    return os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "2")
+    raw = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "2")
+    try:
+        parts = int(raw)
+    except ValueError:
+        parts = 0
+    if parts < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got {raw!r}"
+        )
+    return str(parts)
+
+
+def _sink_table(spark: SparkSession, sink: str) -> DataFrame:
+    """The rows of the memory sink ``sink``, with its temp view dropped.
+    The returned DataFrame's analyzed plan holds the sink itself, so it
+    keeps the rows; the catalog entry would otherwise outlive the query
+    and pin one result per replay run in a long session."""
+    df = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return df
 
 
 def _replay_tmpdir(prefix: str) -> str:
@@ -194,7 +213,7 @@ def q_stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _sink_table(spark, sink)
         .select(
             F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
             "event_type",
@@ -345,7 +364,7 @@ def q_stream_watermark_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _sink_table(spark, sink)
         # the sentinel's own window never finalizes, but filter defensively
         # in case emission semantics ever include it (real windows all
         # start at or before the max real event time)
@@ -538,7 +557,7 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _sink_table(spark, sink)
         .filter(F.col("user_id") >= 0)  # the sentinel's session never emits
         .select(
             "user_id",
@@ -613,7 +632,7 @@ def q_stream_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _sink_table(spark, sink)
         .select(
             F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
             "n_events",
@@ -696,7 +715,7 @@ def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(replay_dir, ignore_errors=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("user_id", "view_id", "click_id")
+    return _sink_table(spark, sink).orderBy("user_id", "view_id", "click_id")
 
 
 @query(
@@ -749,7 +768,7 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(replay_dir, ignore_errors=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("event_id")
+    return _sink_table(spark, sink).orderBy("event_id")
 
 
 @query(
@@ -830,7 +849,7 @@ def q_stream_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _sink_table(spark, sink)
         .groupBy("user_id")
         .agg(F.max(F.struct("n_events", "total")).alias("last"))
         .select(
@@ -1055,7 +1074,7 @@ def q_stream_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(replay_dir, ignore_errors=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("nationkey")
+    return _sink_table(spark, sink).orderBy("nationkey")
 
 
 @query(
@@ -1211,7 +1230,7 @@ def q_stream_dedup_wm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(replay_dir, ignore_errors=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink).orderBy("event_id")
+    return _sink_table(spark, sink).orderBy("event_id")
 
 
 @query(
@@ -1586,7 +1605,7 @@ def q_stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(replay_dir, ignore_errors=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    counts = spark.table(sink).select(
+    counts = _sink_table(spark, sink).select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "event_type",
         "n_events",
@@ -1781,7 +1800,7 @@ def q_stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(sink)
+        _sink_table(spark, sink)
         .select("lang", "n_docs", "total_words", "min_doc", "max_doc")
         .orderBy("lang")
     )

@@ -276,3 +276,23 @@ def test_kafka_option_contract():
     assert opts["maxOffsetsPerTrigger"] == "100000"
     assert opts["failOnDataLoss"] == "false"
     assert opts["kafkaConsumerPollTimeoutMs"] == "2000"
+
+
+@pytest.mark.parametrize("raw", ["", "two", "2.5", "0", "-3"])
+def test_stream_parts_knob_rejects_non_positive_int(monkeypatch, raw):
+    """A bad SPARK_GRAFT_STREAM_SHUFFLE fails at the knob, naming it,
+    instead of inside the planning of every replay query."""
+    from etl4s_spark.queries.streaming_batch import _stream_parts
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
+        _stream_parts()
+
+
+def test_stream_parts_knob_default_and_override(monkeypatch):
+    from etl4s_spark.queries.streaming_batch import _stream_parts
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+    assert _stream_parts() == "2"
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+    assert _stream_parts() == "8"

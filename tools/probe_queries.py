@@ -10,8 +10,14 @@ support a before/after claim.
 Usage:
     python tools/probe_queries.py [--sf DIR] [--runs N] q_a q_b ...
 Prints one JSON object {query: {"runs": [...], "warm_median": s,
-"jobs": [...]}}, where jobs counts the Spark jobs of each run (build
-and execute — eager checkpoints inside the build included).
+"cpu_s": [...], "warm_cpu_median": s, "jit_cpu_s": [...],
+"warm_jit_cpu_median": s, "jobs": [...]}}. Per run: ``runs`` is the wall
+time; ``cpu_s`` the user + system CPU of this process and every process
+below it (the JVM and its Python workers), so JVM-level changes can be
+judged in CPU terms on a host whose wall time follows co-tenant load;
+``jit_cpu_s`` the part of it spent on the JVM's live C1/C2 compiler
+threads; ``jobs`` the Spark jobs (build and execute — eager checkpoints
+inside the build included).
 """
 
 from __future__ import annotations
@@ -24,6 +30,32 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.run import CLK_TCK, tree_cpu_s  # noqa: E402
+
+
+def jit_thread_ticks(jvm_pid: int) -> dict[int, int]:
+    """CPU ticks (user + system) of each live JIT compiler thread of the
+    JVM, by thread id. HotSpot names them "C1 CompilerThreadN" and "C2
+    CompilerThreadN", which /proc truncates to 15 characters."""
+    ticks = {}
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            with open(f"/proc/{jvm_pid}/task/{tid}/stat") as f:
+                head, tail = f.read().rsplit(")", 1)
+        except OSError:  # thread ended during the scan
+            continue
+        if head.split("(", 1)[1] in ("C1 CompilerThre", "C2 CompilerThre"):
+            fields = tail.split()
+            ticks[int(tid)] = int(fields[11]) + int(fields[12])
+    return ticks
+
+
+def jit_cpu_s(before: dict[int, int], after: dict[int, int]) -> float:
+    """Compiler-thread CPU seconds between two snapshots. HotSpot starts
+    and retires compiler threads on demand; a thread that ended between
+    the snapshots loses its last share, so this is a lower bound."""
+    return sum(t - before.get(tid, 0) for tid, t in after.items()) / CLK_TCK
 
 
 def main() -> None:
@@ -45,25 +77,37 @@ def main() -> None:
 
     spark.read.parquet(f"{args.sf}/region.parquet").count()
     sc = spark.sparkContext
-    samples: dict[str, list[float]] = {q: [] for q in args.queries}
-    jobs: dict[str, list[int]] = {q: [] for q in args.queries}
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    series = ("runs", "cpu_s", "jit_cpu_s", "jobs")
+    samples = {q: {k: [] for k in series} for q in args.queries}
     for i in range(args.runs):
         for q in args.queries:
             group = f"probe:{q}:run{i}"
             sc.setJobGroup(group, group)
-            t0 = time.monotonic()
+            c0, j0, t0 = tree_cpu_s(os.getpid()), jit_thread_ticks(jvm_pid), time.monotonic()
             df = qs[q](spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
-            samples[q].append(round(time.monotonic() - t0, 3))
-            jobs[q].append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            t1, j1, c1 = time.monotonic(), jit_thread_ticks(jvm_pid), tree_cpu_s(os.getpid())
+            s = samples[q]
+            s["runs"].append(round(t1 - t0, 3))
+            s["cpu_s"].append(round(c1 - c0, 2))
+            s["jit_cpu_s"].append(round(jit_cpu_s(j0, j1), 2))
+            s["jobs"].append(len(sc.statusTracker().getJobIdsForGroup(group)))
     sc.setJobGroup(None, None)
+
+    def warm_median(xs: list[float]) -> float:
+        return round(statistics.median(xs[1:] if len(xs) > 1 else xs), 3)
+
     out = {}
-    for q, ss in samples.items():
-        warm = ss[1:] if len(ss) > 1 else ss
+    for q, s in samples.items():
         out[q] = {
-            "runs": ss,
-            "warm_median": round(statistics.median(warm), 3),
-            "jobs": jobs[q],
+            "runs": s["runs"],
+            "warm_median": warm_median(s["runs"]),
+            "cpu_s": s["cpu_s"],
+            "warm_cpu_median": warm_median(s["cpu_s"]),
+            "jit_cpu_s": s["jit_cpu_s"],
+            "warm_jit_cpu_median": warm_median(s["jit_cpu_s"]),
+            "jobs": s["jobs"],
         }
     print(json.dumps(out, indent=1))
 
