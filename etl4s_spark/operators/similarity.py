@@ -15,6 +15,11 @@ Two tiers:
   by n_planes/n_tables. The scale path when queries are too many to
   broadcast.
 
+``embedding_neardup_pairs`` (exact all-pairs near-dups of a
+broadcast-small set) is the one numpy kernel here: the HOF fold below is
+interpreted per pair, so its pairs are scored in one ``mapInArrow``
+task with the same fold order, bit for bit (see its docstring).
+
 All vector math widens float→double BEFORE arithmetic (bit-stable vs
 DuckDB's list_cosine_similarity, which computes in double).
 """
@@ -23,8 +28,12 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
 from etl4s_spark.operators.pair_emission import locality_chain_combos
@@ -277,45 +286,144 @@ def ivf_topk(
     )
 
 
+# embedding_neardup_pairs kernel sizing, derived from the row count the
+# driver holds after its collect (no knob). Each chunk of a-side rows
+# scores against the rest of its group in one (chunk × rows) block of
+# about _BLOCK_CELLS doubles, so a block stays near 8 MB at any n. Each
+# Python-worker task takes ~_PAIRS_PER_TASK ordered pairs: a task costs
+# 0.1-0.2 s of CPU to start, and at 64 dims numpy scores these pairs in
+# 1-2 s (4-vCPU VM), so a 500-row input (124,750 pairs) is one task.
+_BLOCK_CELLS = 1 << 20
+_PAIRS_PER_TASK = 1 << 23
+# The kernel drops a pair only when its raw cosine is this far below the
+# threshold: Spark's round(·, 6) moves a value by at most 5e-7, so every
+# pair that can pass the rounded comparison reaches it.
+_ROUND_SLACK = 1e-6
+
+
+def _fold(x, y):
+    """Σₖ x[k]·y[k] as a left fold from 0.0 over the leading axis — the
+    operation order of ``aggregate(zip_with(a, b, x*y), 0.0, acc + x)``
+    (and of l2_norm's fold), so every double equals Spark's. The other
+    axes broadcast: (d, m, 1) against (d, 1, n) gives the (m, n) block of
+    dot products."""
+    acc = np.zeros(np.broadcast_shapes(x.shape[1:], y.shape[1:]))
+    for xk, yk in zip(x, y):
+        acc += xk * yk
+    return acc
+
+
+def _neardup_chunk(ids, vt, norms, lo, hi, floor):
+    """Candidate pairs of rows [lo, hi) of one id-sorted, equal-length
+    group (``vt`` is its dim × rows matrix) against rows [lo, n): the
+    (id_a, id_b, dot, na, nb) arrays of every pair with id_a < id_b
+    whose raw cosine reaches ``floor`` or is NaN, or whose denominator
+    is zero. Sorted ids put every partner of row lo.. at index ≥ lo."""
+    dots = _fold(vt[:, lo:hi, None], vt[:, None, lo:])
+    na, nb = norms[lo:hi, None], norms[None, lo:]
+    den = na * nb
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dots / den
+    keep = (ids[lo:hi, None] < ids[None, lo:]) & (
+        (cos >= floor) | np.isnan(cos) | (den == 0)
+    )
+    i, j = np.nonzero(keep)
+    return ids[lo + i], ids[lo + j], dots[i, j], norms[lo + i], norms[lo + j]
+
+
 def embedding_neardup_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float = 0.9,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs: (id_a, id_b, cos_sim)
     with id_a < id_b and cosine ≥ threshold.
 
     O(n²/2) all-pairs — the verification tier of the dedup funnel. Use
-    directly only on broadcast-small inputs (one side is broadcast, the
-    other streamed, so the big side is never shuffled); at corpus scale
-    feed it LSH bucket candidates (hyperplane_signature) instead of the
-    raw table, exactly like ngram_jaccard_pairs vs minhash_lsh_candidates.
+    directly only on broadcast-small inputs: the rows are collected to
+    the driver once; at corpus scale feed it LSH bucket candidates
+    (hyperplane_signature) instead of the raw table, exactly like
+    ngram_jaccard_pairs vs minhash_lsh_candidates.
+
+    Plan: the vectors are cast to array<double> in Spark (the values of
+    ``as_double``) and collected with one ``toArrow()``. One
+    ``mapInArrow`` kernel then scores the ordered pairs in numpy and
+    emits (id_a, id_b, dot, na, nb) for each pair that could pass: raw
+    cosine ≥ threshold − 1e-6, NaN, or a zero denominator. Spark applies
+    the unchanged ``round(dot / (na·nb), 6) >= threshold`` to every
+    emitted pair, so rounding, NaN ordering and ANSI's DIVIDE_BY_ZERO on
+    zero vectors stay Spark's own.
+
+    Bit-identity with the higher-order-function cosine: each dot product
+    and squared norm is a sequential left fold from 0.0 over the
+    components (``_fold``), the same IEEE operations in the same order
+    as ``aggregate(zip_with(...), 0.0, acc + x)``, and the square root
+    and the division are correctly rounded on both sides. A row the HOF
+    would score as null — null id, null vector, any null element — is
+    dropped before the collect, and rows pair only with rows of the same
+    length, as zip_with's null padding demands. Duplicate ids give one
+    row per row pair, as the join did; id order is numpy's ``<``, which
+    is Spark's for integral and string ids.
+
+    Why a kernel: ``zip_with``/``aggregate`` are CodegenFallback in
+    Spark 4.1, so the former broadcast nested-loop join interpreted the
+    fold per pair (about 1.2 s of CPU per 500-row call) and its stage got
+    no whole-stage codegen. A 64-term unrolled SQL dot was 5× slower
+    still: its generated method passes HotSpot's 8000-byte JIT limit and
+    stays in the bytecode interpreter.
+
+    Task count: one task per ``_PAIRS_PER_TASK`` ordered pairs of the
+    collected rows, so a 500-row input is one task; four tasks saved only
+    10% there, because each Python-worker task costs ~0.12 s of CPU.
     """
-    # Norms are computed once per ROW before the join (n of them), so the
-    # O(n²) pair stage only pays for the dot product. The streamed side
-    # is widened: against a broadcast right, the whole O(n²) sweep fuses
-    # into the left scan — one task on a single-split input (guide §2).
-    a = widen(
-        df.select(F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("__va")),
+    base = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+    table = base.where(
+        F.col("id").isNotNull()
+        & F.col("v").isNotNull()
+        & ~F.exists("v", lambda x: x.isNull())
+    ).toArrow()
+    ids = table.column("id").to_numpy()
+    vecs = table.column("v").combine_chunks()
+    lens = pc.list_value_length(vecs).to_numpy()
+    flat = vecs.flatten().to_numpy()
+    starts = np.cumsum(lens) - lens
+    groups, chunks = [], []
+    for d in np.unique(lens):
+        rows = np.flatnonzero(lens == d)
+        rows = rows[np.argsort(ids[rows], kind="stable")]
+        vt = flat[starts[rows, None] + np.arange(d)].T.copy()
+        groups.append((ids[rows], vt, np.sqrt(_fold(vt, vt))))
+        step = max(1, _BLOCK_CELLS // len(rows))
+        chunks += [(len(groups) - 1, lo, lo + step) for lo in range(0, len(rows) - 1, step)]
+    n_pairs = len(ids) * (len(ids) - 1) // 2
+    n_tasks = max(1, min(len(chunks), -(-n_pairs // _PAIRS_PER_TASK)))
+    floor = threshold - _ROUND_SLACK
+    names = ["id_a", "id_b", "dot", "na", "nb"]
+    types = [table.schema.field("id").type] * 2 + [pa.float64()] * 3
+
+    def kernel(batches):
+        for batch in batches:
+            for task in batch.column(0).to_pylist():
+                for g, lo, hi in chunks[task::n_tasks]:
+                    cols = _neardup_chunk(*groups[g], lo, hi, floor)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, t) for c, t in zip(cols, types)], names=names
+                    )
+
+    id_spark = base.schema["id"].dataType
+    schema = StructType(
+        [StructField(c, id_spark) for c in names[:2]]
+        + [StructField(c, DoubleType()) for c in names[2:]]
+    )
+    pairs = df.sparkSession.range(0, n_tasks, 1, n_tasks).mapInArrow(kernel, schema)
+    return pairs.select(
         "id_a",
-    ).withColumn("__na", l2_norm(F.col("__va")))
-    b = df.select(
-        F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("__vb")
-    ).withColumn("__nb", l2_norm(F.col("__vb")))
-    right = F.broadcast(b) if broadcast_right else b
-    # The cosine goes LAST in an explicit ON clause: Catalyst keeps the
-    # conjunct order there, while a post-join ``cos_sim >= threshold``
-    # filter merges into the join condition IN FRONT of ``id_a < id_b``
-    # and scores all n² row pairs instead of the n(n−1)/2 ordered ones.
-    # The projection re-scores only the surviving pairs.
-    cos = F.round(
-        dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
-    )
-    return a.join(right, (F.col("id_a") < F.col("id_b")) & (cos >= threshold)).select(
-        "id_a", "id_b", cos.alias("cos_sim")
-    )
+        "id_b",
+        F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6).alias("cos_sim"),
+    ).filter(F.col("cos_sim") >= threshold)
 
 
 def _plane_signs(dim: int, n_planes: int, seed: int) -> list[list[int]]:
@@ -1259,8 +1367,8 @@ def semdedup(
         F.col("__n").alias("__nb"),
     )
     # cheapest test first in the ON clause (cell key, then id order, the
-    # cosine last) — the same conjunct-order discipline as
-    # embedding_neardup_pairs
+    # cosine last): Catalyst keeps the conjunct order of an explicit ON
+    # clause, so only same-cell, id-ordered pairs pay the cosine
     cos = F.round(
         dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), 6
     )

@@ -50,15 +50,16 @@ def _neardup_pairs(
     # Materialized at the source by default: the all-pairs cosine is the
     # expensive leaf under every graph query, and most consumers
     # (triangle census e1/e2/e3, degree symmetrize, jaccard wedges,
-    # assortativity moments) reference the frame 2-5 times — self-joins
-    # cannot share a lazy broadcast-NL subplan, so each reference would
-    # re-evaluate the O(n²) dot products. The materialized pair list
-    # itself is tiny (tens of rows per 500 docs). materialize=False is
-    # for consumers that read the pairs EXACTLY once before their own
-    # barrier — and "once" must count union legs: symmetrize() plans its
-    # two legs independently, so even symmetrize-then-checkpoint
-    # evaluates a lazy upstream twice (r12: pagerank and k_core moved
-    # back to the default for exactly this reason).
+    # assortativity moments) reference the frame 2-5 times.
+    # embedding_neardup_pairs collects the vectors once, at this call,
+    # but its pair kernel is a lazy mapInArrow: each reference would rerun
+    # it in a Python worker. The materialized pair list itself is tiny
+    # (tens of rows per 500 docs). materialize=False is for consumers
+    # that read the pairs EXACTLY once before their own barrier — and
+    # "once" must count union legs: symmetrize() plans its two legs
+    # independently, so even symmetrize-then-checkpoint evaluates a lazy
+    # upstream twice (r12: pagerank and k_core moved back to the default
+    # for exactly this reason).
     pairs = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.4).select(
         "id_a", "id_b"
     )

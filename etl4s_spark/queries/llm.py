@@ -4200,7 +4200,8 @@ def q_audit_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # proposed are each a SET of (id_a, id_b) pairs (one row per pair
     # from embedding_neardup_pairs, and proposed's .distinct()); a
     # duplicate pair on either side fans out in the join and inflates
-    # the sums, so do not drop that .distinct().
+    # the sums, so do not drop that .distinct(). The truth side is pinned
+    # by tests/test_llm_ops.py::test_recall_audit_truth_pairs_are_distinct.
     both = truth.withColumn("__t", F.lit(1)).join(
         proposed.withColumn("__p", F.lit(1)), ["id_a", "id_b"], "full_outer"
     )
@@ -4790,6 +4791,8 @@ def q_audit_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = F.broadcast(ths).join(scored, F.col("cos_sim") >= F.col("th")).select(
         "th", "id_a", "id_b"
     )
+    # the hit count joins truth to proposed, so both must be pair SETS
+    # (the q_audit_ann_recall precondition, pinned by the same test)
     nt = truth.groupBy("th").agg(F.count(F.lit(1)).alias("n"))
     hits = (
         truth.join(proposed, ["id_a", "id_b"])

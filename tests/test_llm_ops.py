@@ -404,6 +404,137 @@ def test_embedding_neardup_lsh_sound_and_finds_true_dups(spark, sf_dir):
     assert again == found
 
 
+def _fold_py(x, y):
+    """Σ x[k]·y[k] as a sequential fold from 0.0 in Python doubles."""
+    acc = 0.0
+    for a, b in zip(x, y):
+        acc += a * b
+    return acc
+
+
+def _neardup_reference(spark, rows):
+    """embedding_neardup_pairs by hand, before its threshold: the dot
+    product and squared norms as sequential folds from 0.0, id_a < id_b,
+    rows skipped where the cosine would be null (null id, vector or
+    element, unequal lengths); then Spark's own round(·, 6). Returns
+    (id_a, id_b, raw, cos_sim)."""
+    ok = [(i, v) for i, v in rows if i is not None and v is not None and None not in v]
+    raw = [
+        (
+            ia,
+            ib,
+            _fold_py(va, vb) / (math.sqrt(_fold_py(va, va)) * math.sqrt(_fold_py(vb, vb))),
+        )
+        for ia, va in ok
+        for ib, vb in ok
+        if ia < ib and len(va) == len(vb)
+    ]
+    return spark.createDataFrame(raw, "id_a long, id_b long, raw double").withColumn(
+        "cos_sim", F.round("raw", 6)
+    )
+
+
+def _reprs(df):
+    """Sorted reprs of the (id_a, id_b, cos_sim) rows, so NaN rows compare."""
+    return sorted(repr(tuple(r)) for r in df.select("id_a", "id_b", "cos_sim").collect())
+
+
+def _neardup_rows(spark, rows, threshold):
+    from etl4s_spark.operators.similarity import embedding_neardup_pairs
+
+    df = spark.createDataFrame(rows, "id long, v array<float>")
+    return _reprs(embedding_neardup_pairs(df, "id", "v", threshold=threshold))
+
+
+def test_embedding_neardup_pairs_matches_sequential_fold_reference(spark):
+    """The vectorized pair kernel gives the doubles of a left-fold cosine
+    at every dim, also at a threshold that only a rounded-up cosine
+    reaches (the kernel's pre-filter slack)."""
+    import random
+    import struct
+
+    import numpy as np
+
+    from etl4s_spark.operators.similarity import _fold
+
+    rng = random.Random(7)
+
+    def f32(x):  # the value an array<float> column holds
+        return struct.unpack("f", struct.pack("f", x))[0]
+
+    for dim in (1, 3, 17, 64, 130):
+        rows = [(i, [f32(rng.gauss(0, 1)) for _ in range(dim)]) for i in range(40)]
+        # near-copies, so high thresholds keep some pairs
+        rows += [
+            (100 + i, [f32(x + rng.gauss(0, 0.05)) for x in v]) for i, v in rows[:10]
+        ]
+        # the kernel's dot products are the Python fold's doubles exactly
+        vt = np.array([v for _, v in rows]).T
+        blocks = _fold(vt[:, :, None], vt[:, None, :])
+        assert [[_fold_py(a, b) for _, b in rows] for _, a in rows] == blocks.tolist()
+        ref = _neardup_reference(spark, rows).cache()
+        ups = ref.filter(F.col("cos_sim") > F.col("raw")).orderBy("id_a", "id_b").take(1)
+        assert ups or dim == 1  # at dim 1 every cosine is ±1 or next to it
+        for threshold in [0.9, 0.2, -0.5] + [u.cos_sim for u in ups]:
+            want = _reprs(ref.filter(F.col("cos_sim") >= threshold))
+            assert _neardup_rows(spark, rows, threshold) == want, (dim, threshold)
+        assert all(repr((u.id_a, u.id_b, u.cos_sim)) in want for u in ups)
+        ref.unpersist()
+
+
+def test_embedding_neardup_pairs_edge_rows(spark):
+    """Null id, null vector, null element, a length mismatch, NaN, ±inf
+    and duplicate ids give the reference's rows; empty input gives none;
+    zero vectors raise Spark's DIVIDE_BY_ZERO, as the HOF cosine did."""
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, [1.0, 2.0]),
+        (2, [1.0, 2.0]),
+        (2, [1.0, 2.5]),
+        (3, [nan, 1.0]),
+        (4, [inf, 1.0]),
+        (5, [-inf, 2.0]),
+        (None, [1.0, 2.0]),
+        (6, [1.0, None]),
+        (7, [1.0, 2.0, 3.0]),
+        (8, [2.0, 4.0, 6.0]),
+        (9, None),
+        (10, [-0.5, -1.0]),
+    ]
+    ref = _neardup_reference(spark, rows)
+    for threshold in (0.4, 0.99, -5.0, nan):
+        assert _neardup_rows(spark, rows, threshold) == _reprs(
+            ref.filter(F.col("cos_sim") >= threshold)
+        ), threshold
+    assert _neardup_rows(spark, [], 0.4) == []
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _neardup_rows(spark, [(1, [0.0, 0.0]), (2, [1.0, 1.0])], 0.4)
+    # a norm whose square underflows to 0 against a negative dot: the raw
+    # cosine is -inf, not NaN, and Spark must still see the pair and raise
+    from etl4s_spark.operators.similarity import embedding_neardup_pairs
+
+    tiny = spark.createDataFrame([(1, [1e-170]), (2, [-1e150])], "id long, v array<double>")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        embedding_neardup_pairs(tiny, "id", "v", 0.4).collect()
+
+
+def test_recall_audit_truth_pairs_are_distinct(spark, sf_dir):
+    """q_audit_ann_recall and q_audit_lsh_threshold_sweep count hits by
+    joining their truth pairs to the proposed ones, so a repeated
+    (id_a, id_b) in the truth would count twice (the precondition stated
+    in queries/llm.py). Their truth is embedding_neardup_pairs over the
+    first 500 vectors at 0.4 and 0.3; on the test data it holds no
+    repeated pair."""
+    from etl4s_spark.operators.similarity import embedding_neardup_pairs
+    from etl4s_spark.sources.tables import load_table
+
+    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
+    for threshold in (0.4, 0.3):
+        truth = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=threshold)
+        pairs = [(r.id_a, r.id_b) for r in truth.collect()]
+        assert pairs and len(set(pairs)) == len(pairs), threshold
+
+
 def test_ann_ivf_recall_vs_brute_force(spark, sf_dir):
     from etl4s_spark.operators.similarity import ivf_centroids, ivf_topk
     from etl4s_spark.sources.tables import load_table

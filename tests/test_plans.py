@@ -443,18 +443,28 @@ def _ordered(cond: str, *patterns: str) -> bool:
 
 def test_pair_joins_test_ids_before_expensive_score(spark, sf_dir):
     """The pair joins author their ON clause cheapest-first and Catalyst
-    keeps that order, so the interpreted cosine (embedding_neardup_pairs,
-    semdedup) and the banded levenshtein DP (q_fuzzy_pairs, ADVICE r13)
-    run only on pairs that passed the cell-key / id-order tests. A
-    post-join filter on the score would merge into the join condition
-    AHEAD of ``id_a < id_b`` and score every row pair."""
+    keeps that order, so the interpreted cosine (semdedup) and the
+    banded levenshtein DP (q_fuzzy_pairs, ADVICE r13) run only on pairs
+    that passed the cell-key / id-order tests. A post-join filter on the
+    score would merge into the join condition AHEAD of ``id_a < id_b``
+    and score every row pair. embedding_neardup_pairs has no join: Spark
+    scores only the rows its kernel emits, and the kernel emits only
+    ``id_a < id_b`` pairs — a threshold every pair passes must return
+    each ordered pair exactly once."""
     from etl4s_spark.operators.similarity import embedding_neardup_pairs, semdedup
     from etl4s_spark.queries import QUERIES, load_all
 
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
     ids, cos = r"\(id_a#\d+L? < id_b#\d+L?\)", r"round\(\(aggregate"
-    cond = _join_condition(embedding_neardup_pairs(e, "vec_id", "embedding", 0.4))
-    assert _ordered(cond, ids, cos), cond
+    every = embedding_neardup_pairs(e, "vec_id", "embedding", -2.0)
+    plan = every._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    assert not any("Join" in line for line in plan), plan
+    score = next(i for i, line in enumerate(plan) if "Filter (round((dot#" in line)
+    assert "MapInArrow" in plan[score + 1], plan
+    rows = [(r.id_a, r.id_b) for r in every.collect()]
+    n = e.count()
+    assert len(rows) == len(set(rows)) == n * (n - 1) // 2 > 0
+    assert all(a < b for a, b in rows)
     cond = _join_condition(semdedup(e, "vec_id", "embedding", n_clusters=8))
     assert _ordered(cond, r"\(__ca#\d+ = __cb#\d+\)", ids, cos), cond
 

@@ -11,13 +11,18 @@ Usage:
     python tools/probe_queries.py [--sf DIR] [--runs N] q_a q_b ...
 Prints one JSON object {query: {"runs": [...], "warm_median": s,
 "cpu_s": [...], "warm_cpu_median": s, "jit_cpu_s": [...],
-"warm_jit_cpu_median": s, "jobs": [...]}}. Per run: ``runs`` is the wall
-time; ``cpu_s`` the user + system CPU of this process and every process
-below it (the JVM and its Python workers), so JVM-level changes can be
-judged in CPU terms on a host whose wall time follows co-tenant load;
-``jit_cpu_s`` the part of it spent on the JVM's live C1/C2 compiler
-threads; ``jobs`` the Spark jobs (build and execute — eager checkpoints
-inside the build included).
+"warm_jit_cpu_median": s, "pyworker_cpu_s": [...],
+"warm_pyworker_cpu_median": s, "jobs": [...]}}. Per run: ``runs`` is the
+wall time; ``cpu_s`` the user + system CPU of this process and every
+process below it (the JVM and its Python workers), so JVM-level changes
+can be judged in CPU terms on a host whose wall time follows co-tenant
+load; ``jit_cpu_s`` the part of it spent on the JVM's live C1/C2
+compiler threads; ``pyworker_cpu_s`` the part spent in the processes
+below the JVM: the Python worker daemon and its workers, plus the short
+helpers the JVM forks. Spark's executor CPU metric counts JVM task
+threads only, so work moved into a Python worker shows here and not
+there. ``jobs`` counts the Spark jobs (build and execute — eager
+checkpoints inside the build included).
 """
 
 from __future__ import annotations
@@ -58,6 +63,23 @@ def jit_cpu_s(before: dict[int, int], after: dict[int, int]) -> float:
     return sum(t - before.get(tid, 0) for tid, t in after.items()) / CLK_TCK
 
 
+def pyworker_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds of every process below the JVM: the children it has
+    reaped, plus the process tree of each live child (listed per JVM
+    thread in /proc/<pid>/task/<tid>/children)."""
+    kids: set[int] = set()
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            with open(f"/proc/{jvm_pid}/task/{tid}/children") as f:
+                kids.update(map(int, f.read().split()))
+        except OSError:  # thread ended during the scan
+            continue
+    with open(f"/proc/{jvm_pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    reaped = (int(fields[13]) + int(fields[14])) / CLK_TCK
+    return reaped + sum(tree_cpu_s(k) for k in kids)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -78,20 +100,23 @@ def main() -> None:
     spark.read.parquet(f"{args.sf}/region.parquet").count()
     sc = spark.sparkContext
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
-    series = ("runs", "cpu_s", "jit_cpu_s", "jobs")
+    series = ("runs", "cpu_s", "jit_cpu_s", "pyworker_cpu_s", "jobs")
     samples = {q: {k: [] for k in series} for q in args.queries}
     for i in range(args.runs):
         for q in args.queries:
             group = f"probe:{q}:run{i}"
             sc.setJobGroup(group, group)
-            c0, j0, t0 = tree_cpu_s(os.getpid()), jit_thread_ticks(jvm_pid), time.monotonic()
+            c0, j0, w0 = tree_cpu_s(os.getpid()), jit_thread_ticks(jvm_pid), pyworker_cpu_s(jvm_pid)
+            t0 = time.monotonic()
             df = qs[q](spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
-            t1, j1, c1 = time.monotonic(), jit_thread_ticks(jvm_pid), tree_cpu_s(os.getpid())
+            t1 = time.monotonic()
+            w1, j1, c1 = pyworker_cpu_s(jvm_pid), jit_thread_ticks(jvm_pid), tree_cpu_s(os.getpid())
             s = samples[q]
             s["runs"].append(round(t1 - t0, 3))
             s["cpu_s"].append(round(c1 - c0, 2))
             s["jit_cpu_s"].append(round(jit_cpu_s(j0, j1), 2))
+            s["pyworker_cpu_s"].append(round(w1 - w0, 2))
             s["jobs"].append(len(sc.statusTracker().getJobIdsForGroup(group)))
     sc.setJobGroup(None, None)
 
@@ -107,6 +132,8 @@ def main() -> None:
             "warm_cpu_median": warm_median(s["cpu_s"]),
             "jit_cpu_s": s["jit_cpu_s"],
             "warm_jit_cpu_median": warm_median(s["jit_cpu_s"]),
+            "pyworker_cpu_s": s["pyworker_cpu_s"],
+            "warm_pyworker_cpu_median": warm_median(s["pyworker_cpu_s"]),
             "jobs": s["jobs"],
         }
     print(json.dumps(out, indent=1))
