@@ -1,10 +1,7 @@
 from etl4s_spark.plans.plan_lineage import lineage_from_plan  # noqa: F401
 from etl4s_spark.plans.observe import (  # noqa: F401
     ObservedMetrics,
-    RunReport,
     ensure_df,
     explain_str,
     observe_counts,
-    run_report,
-    timed_action,
 )

@@ -1,7 +1,7 @@
 """Plan inspection + Spark-native observability (SURVEY.md §2.A22-A31
 mapping: ensure → Observation metrics, Trace → QueryExecutionListener).
 
-Three pieces:
+Two pieces:
 
 - ``explain_str`` — programmatic access to the formatted physical plan
   (what the plan tests assert on).
@@ -11,19 +11,14 @@ Three pieces:
   (vs the naive filter+count re-scan). This is the at-scale realization
   of the reference's ``ensure`` (src-3/Etl4s.scala:1859-1900) — all
   checks evaluated in ONE pass, like its ``ensurePar`` aspires to.
-- ``timed_action`` / ``RunReport`` — per-action wall time + observed row
-  counts (the engine-side complement of core.trace.TraceReport). Spark 4
-  exposes no Python QueryExecutionListener, so actions are timed at the
-  call site and row counts ride along via Observation.
 """
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl4s_spark.core.validation import ValidationException
@@ -94,55 +89,3 @@ def ensure_df(
             raise ValidationException(failures)
     return df
 
-
-@dataclass
-class ActionMetrics:
-    description: str
-    duration_ms: float
-    output_rows: int | None
-    error: str | None = None
-
-
-@dataclass
-class RunReport:
-    actions: list[ActionMetrics] = field(default_factory=list)
-
-    @property
-    def total_ms(self) -> float:
-        return sum(a.duration_ms for a in self.actions)
-
-
-def timed_action(
-    report: RunReport,
-    df: DataFrame,
-    action,
-    description: str = "action",
-) -> Any:
-    """Run ``action(df)`` with an Observation riding along: records wall
-    time + exact row count into the report without a second job.
-
-    The row count comes from ``df.observe`` (computed during the action),
-    NOT an extra ``count()`` — at 100 TB a second pass is the difference
-    between one scan and two."""
-    obs = Observation(f"__timed_{len(report.actions)}")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    t0 = time.monotonic()
-    try:
-        result = action(observed)
-    except Exception as e:
-        report.actions.append(
-            ActionMetrics(description, (time.monotonic() - t0) * 1000.0, None, error=str(e))
-        )
-        raise
-    duration = (time.monotonic() - t0) * 1000.0
-    rows = None
-    try:
-        rows = int(obs.get["rows"])
-    except Exception:
-        pass
-    report.actions.append(ActionMetrics(description, duration, rows))
-    return result
-
-
-def run_report(spark: SparkSession | None = None) -> RunReport:
-    return RunReport()

@@ -7,42 +7,57 @@ on a ``readStream`` DataFrame — streaming/test coverage replays these
 against files and asserts batch equivalence (tests/test_streaming.py).
 That equivalence is the correctness argument Structured Streaming is
 built on (stream = unbounded table).
+
+The ``q_stream_*_replay`` queries put that argument under the oracle
+gate: each one streams a bounded events slice and returns the final
+state, which must equal the one-shot SQL. A replay is built from four
+helpers over the streaming layer (streaming/core.py):
+
+- ``_replay_stream(spark, schema, batches)`` stages Arrow tables as
+  ordered single-file micro-batches, yields a ``file_stream`` paced at
+  one file per trigger, and removes the staged dir on exit;
+- ``_drain_to_memory(spark, df, mode)`` runs the stream to completion
+  into a memory sink (``run_stream_to_memory``) under
+  ``_REPLAY_PARTITIONS`` shuffle partitions, restores the session's
+  count, and returns the sink's rows with its temp view dropped;
+- ``_slices(tbl, k)`` cuts a table into k micro-batches;
+- ``_sentinel(tbl)`` builds the far-future row that flushes
+  watermark-bound state in append mode.
+
+The three ``foreachBatch`` replays (sink, upsert, bitmap) stage through
+``_replay_stream`` but own their sink and read-back.
+``_REPLAY_PARTITIONS`` is a fixed constant, not a knob: every replay's
+input is bounded by construction, so the count depends on nothing that
+varies (see its comment).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl4s_spark.queries import query
 from etl4s_spark.sources.tables import load_table
+from etl4s_spark.streaming.core import file_stream, run_stream_to_memory
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _DUCK_FMT = "%Y-%m-%d %H:%M:%S.%f"
 
-
-def _stream_parts() -> str:
-    """Shuffle/state partition count for the bounded replay streams.
-    State-store commit cost is per (micro-batch × partition) and the
-    replayed slices are bounded by construction (every replay filters
-    event_id < 20000), so a SMALL fixed count wins locally: r13 probes
-    read 8 partitions ≈ 1.85 s vs 2 partitions ≈ 1.6-1.8 s per replay
-    with identical results (complete-mode final state is partition-count
-    independent). A cluster deployment sizes this to key cardinality via
-    SPARK_GRAFT_STREAM_SHUFFLE — the local default is NOT a throughput
-    setting, it bounds per-batch fixed cost."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "2")
-    try:
-        parts = int(raw)
-    except ValueError:
-        parts = 0
-    if parts < 1:
-        raise ValueError(
-            f"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got {raw!r}"
-        )
-    return str(parts)
+# Shuffle/state partitions of every replay stream. State-store commit
+# cost is per (micro-batch × partition), and every replay's input is
+# bounded by construction (event_id < 20000, or 1000 synthdocs rows, at
+# any sf), so a SMALL fixed count wins: r13 probes read 8 partitions
+# ≈ 1.85 s vs 2 partitions ≈ 1.6-1.8 s per replay, with identical
+# results (complete-mode final state is partition-count independent).
+# The session's own count is the core count, which only adds commits
+# per batch. This bounds per-batch fixed cost; it is not a throughput
+# setting.
+_REPLAY_PARTITIONS = 2
 
 
 def _sink_table(spark: SparkSession, sink: str) -> DataFrame:
@@ -68,6 +83,82 @@ def _replay_tmpdir(prefix: str) -> str:
         "/dev/shm" if os.path.isdir("/dev/shm") else None
     )
     return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def _stage_replay_files(tables, replay_dir: str) -> None:
+    """Write arrow tables as ordered single-file micro-batches: the file
+    stream source orders by modification time, so mtimes are pinned 60 s
+    apart to force the batch sequence."""
+    import time as _time
+
+    import pyarrow.parquet as pq
+
+    t0 = _time.time()
+    for i, b in enumerate(tables):
+        dst = os.path.join(replay_dir, f"batch-{i}.parquet")
+        pq.write_table(b, dst)
+        os.utime(dst, (t0 + 60 * i, t0 + 60 * i))
+
+
+@contextmanager
+def _replay_stream(spark: SparkSession, schema, batches):
+    """A file stream replaying ``batches`` (Arrow tables) as one
+    micro-batch each, in order. The staged files live in a
+    ``_replay_tmpdir`` that is removed on exit: the memory sink or the
+    foreachBatch target holds the rows by then."""
+    replay_dir = _replay_tmpdir("etl4s_replay_")
+    try:
+        _stage_replay_files(batches, replay_dir)
+        yield file_stream(spark, replay_dir, schema, max_files_per_trigger=1)
+    finally:
+        shutil.rmtree(replay_dir, ignore_errors=True)
+
+
+def _drain_to_memory(spark: SparkSession, df: DataFrame, mode: str) -> DataFrame:
+    """Run the streaming ``df`` to completion into a memory sink in
+    output ``mode`` under ``_REPLAY_PARTITIONS`` shuffle partitions, and
+    return the sink's rows (``_sink_table``). The session's partition
+    count is restored even when the stream fails."""
+    sink = f"replay_{uuid.uuid4().hex[:8]}"
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(_REPLAY_PARTITIONS))
+    try:
+        run_stream_to_memory(df, sink, mode)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    return _sink_table(spark, sink)
+
+
+def _slices(tbl, k: int) -> list:
+    """``tbl`` cut into ``k`` consecutive slices of ⌈n/k⌉ rows (the last
+    ones shorter, or empty)."""
+    step = (tbl.num_rows + k - 1) // k
+    return [tbl.slice(i * step, step) for i in range(k)]
+
+
+def _sentinel(tbl):
+    """The watermark-flush row for an events slice, and the slice's max
+    ts: a '__sentinel' event 2 h past max(ts) pushes the watermark past
+    every real window or session, and the trailing no-data micro-batch
+    lets append mode emit them all. On an empty slice max(ts) is NULL;
+    any fixed base works, since the sentinel then only advances the
+    watermark past nonexistent data."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mx_ts = pc.max(tbl["ts"]).as_py() or datetime.datetime(2024, 1, 1)
+    values = {
+        "event_id": -1,
+        "ts": mx_ts + datetime.timedelta(hours=2),
+        "user_id": -1,
+        "event_type": "__sentinel",
+        "value": 0.0,
+        "props": "{}",
+    }
+    row = pa.table({f.name: pa.array([values[f.name]], f.type) for f in tbl.schema})
+    return row, mx_ts
 
 
 @query(
@@ -169,75 +260,22 @@ def q_stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_id < 20000, like every other replay): the stream-equals-batch
     proof needs micro-batch structure, not corpus volume — an unbounded
     driver-side staging would grow linearly with sf."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_stream_replay_")
     # one Spark scan; 4 ordered micro-batch files staged driver-side
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 3) // 4
-    _stage_replay_files([tbl.slice(i * step, step) for i in range(4)], replay_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = (
-        stream.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 4)) as stream:
+        agg = stream.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
                 F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
             ).alias("total_value"),
         )
-    )
-    sink = f"replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            # the memory sink holds the rows; the replay files are dead weight
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return (
-        _sink_table(spark, sink)
-        .select(
-            F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-        .orderBy("window_start", "event_type")
-    )
-
-
-def _stage_replay_files(tables, replay_dir: str) -> None:
-    """Write arrow tables as ordered single-file micro-batches: the file
-    stream source orders by modification time, so mtimes are pinned 60 s
-    apart to force the batch sequence."""
-    import os
-    import time as _time
-
-    import pyarrow.parquet as pq
-
-    t0 = _time.time()
-    for i, b in enumerate(tables):
-        dst = os.path.join(replay_dir, f"batch-{i}.parquet")
-        pq.write_table(b, dst)
-        os.utime(dst, (t0 + 60 * i, t0 + 60 * i))
+        out = _drain_to_memory(spark, agg, "complete")
+    return out.select(
+        F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_value",
+    ).orderBy("window_start", "event_type")
 
 
 @query(
@@ -285,90 +323,39 @@ def q_stream_watermark_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Covers the reference's streaming watermark/late-data bullet
     (SURVEY.md §2.B) with a hard driver-gate check rather than only
     pytest equivalence."""
-    import datetime
-    import shutil
-    import tempfile
-    import uuid
-
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     # bounded slice: replay cost is micro-batch/state-store overhead, not
     # data volume — 20k events exercise identical semantics at any sf
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_wm_replay_")
-
     # ONE Spark scan; the replay files are tiny and written driver-side
     # (this is test-harness staging, not a data path)
     tbl = ev.toArrow()
-    mx_scalar = pc.max(tbl["ts"])
-    # empty corpus: max is NULL — any fixed base works, the sentinel only
-    # advances the watermark past (nonexistent) data
-    mx_ts = mx_scalar.as_py() or datetime.datetime(2024, 1, 1)
+    sentinel, mx_ts = _sentinel(tbl)
     even_mask = pc.equal(pc.bit_wise_and(tbl["event_id"], 1), 0)
-    sentinel = pa.table(
-        {
-            "event_id": pa.array([-1], tbl.schema.field("event_id").type),
-            "ts": pa.array(
-                [mx_ts + datetime.timedelta(hours=2)], tbl.schema.field("ts").type
-            ),
-            "user_id": pa.array([-1], tbl.schema.field("user_id").type),
-            "event_type": pa.array(["__sentinel"], tbl.schema.field("event_type").type),
-            "value": pa.array([0.0], tbl.schema.field("value").type),
-            "props": pa.array(["{}"], tbl.schema.field("props").type),
-        }
-    ).select([f.name for f in tbl.schema])
-    _stage_replay_files(
-        [
-            tbl.filter(even_mask),
-            tbl.slice(0, 0),  # settling batch: applies W1 to the operator
-            tbl.filter(pc.invert(even_mask)),
-            sentinel,
-        ],
-        replay_dir,
-    )
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("total_value"),
+    batches = [
+        tbl.filter(even_mask),
+        tbl.slice(0, 0),  # settling batch: applies W1 to the operator
+        tbl.filter(pc.invert(even_mask)),
+        sentinel,
+    ]
+    with _replay_stream(spark, ev.schema, batches) as stream:
+        agg = (
+            stream.withWatermark("ts", "30 minutes")
+            .groupBy(F.window("ts", "10 minutes").alias("w"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
+                ).alias("total_value"),
+            )
         )
-    )
-    sink = f"wm_replay_{uuid.uuid4().hex[:8]}"
-    # state-store cost is per (micro-batch × shuffle partition); 2 state
-    # partitions are plenty for a bounded replay and cut wall time ~3×.
-    # (A real cluster deployment would size this to the key cardinality.)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        out = _drain_to_memory(spark, agg, "append")
     return (
-        _sink_table(spark, sink)
         # the sentinel's own window never finalizes, but filter defensively
         # in case emission semantics ever include it (real windows all
         # start at or before the max real event time)
-        .filter(F.col("w.start") <= F.lit(mx_ts))
+        out.filter(F.col("w.start") <= F.lit(mx_ts))
         .select(
             F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
             "n_events",
@@ -496,69 +483,22 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the trailing no-data micro-batch flushes once the watermark passes).
     Same staging as q_stream_watermark_replay; decimal-carried sums keep
     the result independent of accumulation order."""
-    import datetime
-    import shutil
-    import tempfile
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_sess_replay_")
     tbl = ev.toArrow()
-    # empty corpus: max is NULL — any fixed base works (see the
-    # watermark replay's sentinel note)
-    mx_ts = pc.max(tbl["ts"]).as_py() or datetime.datetime(2024, 1, 1)
-    sentinel = pa.table(
-        {
-            "event_id": pa.array([-1], tbl.schema.field("event_id").type),
-            "ts": pa.array(
-                [mx_ts + datetime.timedelta(hours=2)], tbl.schema.field("ts").type
-            ),
-            "user_id": pa.array([-1], tbl.schema.field("user_id").type),
-            "event_type": pa.array(["__sentinel"], tbl.schema.field("event_type").type),
-            "value": pa.array([0.0], tbl.schema.field("value").type),
-            "props": pa.array(["{}"], tbl.schema.field("props").type),
-        }
-    ).select([f.name for f in tbl.schema])
-    _stage_replay_files([tbl, sentinel], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-            ).alias("total_value"),
+    with _replay_stream(spark, ev.schema, [tbl, _sentinel(tbl)[0]]) as stream:
+        agg = (
+            stream.withWatermark("ts", "30 minutes")
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
+                ).alias("total_value"),
+            )
         )
-    )
-    sink = f"sess_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        out = _drain_to_memory(spark, agg, "append")
     return (
-        _sink_table(spark, sink)
-        .filter(F.col("user_id") >= 0)  # the sentinel's session never emits
+        out.filter(F.col("user_id") >= 0)  # the sentinel's session never emits
         .select(
             "user_id",
             F.date_format(F.col("w.start"), _TS_FMT).alias("session_start"),
@@ -592,54 +532,20 @@ def q_stream_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark/join/dedup/arbitrary state) now has an oracle-gated
     replay. Decimal-carried sums keep micro-batch accumulation order out
     of the result."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_slide_replay_")
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = stream.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w")).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4).alias(
-            "total_value"
-        ),
-    )
-    sink = f"slide_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 2)) as stream:
+        agg = stream.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w")).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4).alias(
+                "total_value"
+            ),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return (
-        _sink_table(spark, sink)
-        .select(
-            F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
-            "n_events",
-            "total_value",
-        )
-        .orderBy("window_start")
-    )
+        out = _drain_to_memory(spark, agg, "complete")
+    return out.select(
+        F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
+        "n_events",
+        "total_value",
+    ).orderBy("window_start")
 
 
 @query(
@@ -667,55 +573,31 @@ def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     state at scale; the oracle is the plain batch join — inner
     stream-stream joins emit exactly the batch result once the replay
     drains."""
-    import shutil
-    import tempfile
-    import uuid
-
     from etl4s_spark.streaming.core import stream_stream_join
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_ssj_replay_")
-    _stage_replay_files([ev.toArrow()], replay_dir)
-
-    stream = spark.readStream.schema(ev.schema).parquet(replay_dir)
-    views = stream.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("user_id"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("v_ts"),
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    joined = stream_stream_join(
-        views,
-        clicks,
-        "v_ts",
-        "c_ts",
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-    ).select("user_id", "view_id", "click_id")
-
-    sink = f"ssj_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
+    with _replay_stream(spark, ev.schema, [ev.toArrow()]) as stream:
+        views = stream.filter(F.col("event_type") == "view").select(
+            F.col("user_id").alias("user_id"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("v_ts"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _sink_table(spark, sink).orderBy("user_id", "view_id", "click_id")
+        clicks = stream.filter(F.col("event_type") == "click").select(
+            F.col("user_id").alias("c_user_id"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("c_ts"),
+        )
+        joined = stream_stream_join(
+            views,
+            clicks,
+            "v_ts",
+            "c_ts",
+            (F.col("user_id") == F.col("c_user_id"))
+            & (F.col("c_ts") > F.col("v_ts"))
+            & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
+        ).select("user_id", "view_id", "click_id")
+        out = _drain_to_memory(spark, joined, "append")
+    return out.orderBy("user_id", "view_id", "click_id")
 
 
 @query(
@@ -734,41 +616,15 @@ def q_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of the exact-dedup tier; dropDuplicatesWithinWatermark
     (streaming/core.py stateful_dedup) is the bounded-state variant when
     keys don't repeat outside a time horizon."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_sdedup_replay_")
     tbl = ev.toArrow()
-    _stage_replay_files([tbl, tbl], replay_dir)  # duplicates across batches
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    deduped = stream.select("event_id", "user_id", "event_type").dropDuplicates(
-        ["event_id"]
-    )
-    sink = f"sdedup_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
+    # duplicates across batches
+    with _replay_stream(spark, ev.schema, [tbl, tbl]) as stream:
+        deduped = stream.select("event_id", "user_id", "event_type").dropDuplicates(
+            ["event_id"]
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _sink_table(spark, sink).orderBy("event_id")
+        out = _drain_to_memory(spark, deduped, "append")
+    return out.orderBy("event_id")
 
 
 @query(
@@ -799,10 +655,6 @@ def q_stream_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent and the final total compares as a BIGINT with no
     rounding anywhere. Covers SURVEY §2.B streaming 'arbitrary state'
     (VERDICT r2 item 2)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from etl4s_spark.streaming.core import stateful_running_agg
 
     # bounded slice: the replay cost is per (micro-batch x key-group)
@@ -819,38 +671,11 @@ def q_stream_state_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_micros"),
         )
     )
-    replay_dir = _replay_tmpdir("etl4s_state_replay_")
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(i * step, step) for i in range(2)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    running = stateful_running_agg(stream, ["user_id"], "value_micros")
-    sink = f"state_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            running.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 2)) as stream:
+        running = stateful_running_agg(stream, ["user_id"], "value_micros")
+        out = _drain_to_memory(spark, running, "update")
     return (
-        _sink_table(spark, sink)
-        .groupBy("user_id")
+        out.groupBy("user_id")
         .agg(F.max(F.struct("n_events", "total")).alias("last"))
         .select(
             "user_id",
@@ -880,41 +705,28 @@ def q_stream_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes are made idempotent by keying on batch_id (overwrite-by-
     partition or MERGE); append is exact here because the replay runs
     failure-free start-to-finish."""
-    import shutil
-    import tempfile
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 20000)
         .select("event_id", "user_id", F.round("value", 4).alias("value"))
     )
-    replay_dir = _replay_tmpdir("etl4s_sink_replay_src_")
-    out_dir = _replay_tmpdir("etl4s_sink_replay_out_") + "/out"
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 2)) as stream:
+        out_root = _replay_tmpdir("etl4s_sink_replay_out_")
+        out_dir = out_root + "/out"
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.write.mode("append").parquet(out_dir)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    q = stream.writeStream.foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-        # materialize BEFORE cleanup: the returned frame must not lazily
-        # reference the temp sink (the q_stream_upsert_replay rule —
-        # otherwise one versioned temp dir leaks per invocation)
-        out_tbl = spark.read.parquet(out_dir).orderBy("event_id").toArrow()
-    finally:
-        q.stop()
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
+        q = stream.writeStream.foreachBatch(sink).start()
+        try:
+            q.processAllAvailable()
+            # materialize BEFORE cleanup: the returned frame must not lazily
+            # reference the temp sink (the q_stream_upsert_replay rule —
+            # otherwise one versioned temp dir leaks per invocation)
+            out_tbl = spark.read.parquet(out_dir).orderBy("event_id").toArrow()
+        finally:
+            q.stop()
+            shutil.rmtree(out_root, ignore_errors=True)
     # hand the Arrow table to createDataFrame directly (Spark 4 accepts
     # pyarrow tables): the old .to_pandas() hop could alter nullability/
     # dtypes and raises on an empty result (ADVICE r5)
@@ -1024,11 +836,11 @@ def q_stream_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     how slowly-changing enrichment stays fresh without restarting the
     stream). Decimal-carried sums make micro-batch accumulation order
     irrelevant; the oracle is the one-shot batch join+aggregate."""
-    import shutil
-    import tempfile
-    import uuid
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 20000)
+        .select("event_id", "ts", "user_id", "value")
+    )
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     dim = cust.join(nat, cust.c_nationkey == nat.n_nationkey).select(
@@ -1036,45 +848,16 @@ def q_stream_static_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("nationkey"),
         F.col("n_name").alias("nation"),
     )
-
-    replay_dir = _replay_tmpdir("etl4s_ss_static_replay_")
-    tbl = ev.select("event_id", "ts", "user_id", "value").toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.select("event_id", "ts", "user_id", "value").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    enriched = stream.join(
-        F.broadcast(dim), stream.user_id + 1 == dim.c_custkey
-    )
-    agg = enriched.groupBy("nationkey", "nation").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
-        ).alias("total_value"),
-    )
-    sink = f"ss_static_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 2)) as stream:
+        enriched = stream.join(F.broadcast(dim), stream.user_id + 1 == dim.c_custkey)
+        agg = enriched.groupBy("nationkey", "nation").agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.round(
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 4
+            ).alias("total_value"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _sink_table(spark, sink).orderBy("nationkey")
+        out = _drain_to_memory(spark, agg, "complete")
+    return out.orderBy("nationkey")
 
 
 @query(
@@ -1114,53 +897,43 @@ def q_stream_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct) — both associative, so merging per-batch partials MUST
     equal the one-shot batch aggregate the oracle computes. Replays in
     two micro-batches split mid-stream to prove it."""
-    import shutil
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_upsert_replay_src_")
-    target_base = _replay_tmpdir("etl4s_upsert_target_")
-    tbl = ev.select("event_id", "ts", "user_id", "value").toArrow()
-    n = tbl.num_rows
-    step = (n + 1) // 2
-    _stage_replay_files([tbl.slice(0, step), tbl.slice(step, step)], replay_dir)
-
-    stream = (
-        spark.readStream.schema(ev.select("event_id", "ts", "user_id", "value").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
     from etl4s_spark.streaming.core import versioned_upsert_batch
 
-    versions: list[str] = []
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 20000)
+        .select("event_id", "ts", "user_id", "value")
+    )
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 2)) as stream:
+        target_base = _replay_tmpdir("etl4s_upsert_target_")
+        versions: list[str] = []
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = versioned_upsert_batch(
-            spark, target_base, batch_df, batch_id, _upsert_merge_fn
-        )
-        versions.append(dst)
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-        # materialize the final version eagerly so BOTH temp dirs can be
-        # removed before returning (the result is a bounded per-user
-        # aggregate; a lazy reader over versions[-1] would leak target_base)
-        final = (
-            spark.read.parquet(versions[-1])
-            .select(
-                "user_id",
-                "n_events",
-                F.round(F.col("cand.value"), 4).alias("last_value"),
-                F.date_format(F.col("cand.ts"), _TS_FMT).alias("last_ts"),
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            dst = versioned_upsert_batch(
+                spark, target_base, batch_df, batch_id, _upsert_merge_fn
             )
-            .orderBy("user_id")
-        )
-        final_tbl = final.toArrow()
-    finally:
-        q.stop()
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        shutil.rmtree(target_base, ignore_errors=True)
+            versions.append(dst)
+
+        q = stream.writeStream.foreachBatch(merge_batch).start()
+        try:
+            q.processAllAvailable()
+            # materialize the final version eagerly so the target can be
+            # removed before returning (the result is a bounded per-user
+            # aggregate; a lazy reader over versions[-1] would leak it)
+            final_tbl = (
+                spark.read.parquet(versions[-1])
+                .select(
+                    "user_id",
+                    "n_events",
+                    F.round(F.col("cand.value"), 4).alias("last_value"),
+                    F.date_format(F.col("cand.ts"), _TS_FMT).alias("last_ts"),
+                )
+                .orderBy("user_id")
+                .toArrow()
+            )
+        finally:
+            q.stop()
+            shutil.rmtree(target_base, ignore_errors=True)
     return (
         spark.createDataFrame(final_tbl)
         .select(
@@ -1192,45 +965,21 @@ def q_stream_dedup_wm_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     production sizes the horizon to the source's re-delivery window
     (e.g. Kafka retention), which is the entire point: state is bounded
     by horizon × arrival rate, not by corpus cardinality."""
-    import shutil
-    import tempfile
-    import uuid
-
     from etl4s_spark.streaming.core import stateful_dedup
 
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_wmdedup_replay_")
-    tbl = ev.select("event_id", "ts", "user_id", "event_type").toArrow()
-    _stage_replay_files([tbl, tbl], replay_dir)  # duplicates across batches
-
-    stream = (
-        spark.readStream.schema(
-            ev.select("event_id", "ts", "user_id", "event_type").schema
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 20000)
+        .select("event_id", "ts", "user_id", "event_type")
     )
-    deduped = stateful_dedup(
-        stream, ["event_id"], ts_col="ts", watermark="30 days"
-    ).select("event_id", "user_id", "event_type")
-    sink = f"wmdedup_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _sink_table(spark, sink).orderBy("event_id")
+    tbl = ev.toArrow()
+    # duplicates across batches
+    with _replay_stream(spark, ev.schema, [tbl, tbl]) as stream:
+        deduped = stateful_dedup(
+            stream, ["event_id"], ts_col="ts", watermark="30 days"
+        ).select("event_id", "user_id", "event_type")
+        out = _drain_to_memory(spark, deduped, "append")
+    return out.orderBy("event_id")
 
 
 @query(
@@ -1568,44 +1317,15 @@ def q_stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     while ranking the final state costs one WindowGroupLimit over
     O(windows × types) rows. Counts are integers — no accumulation-order
     sensitivity; rank ties break on event_type."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql.window import Window
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_stream_topk_")
-    tbl = ev.toArrow()
-    n = tbl.num_rows
-    step = (n + 3) // 4
-    _stage_replay_files([tbl.slice(i * step, step) for i in range(4)], replay_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
-    agg = stream.groupBy(
-        F.window("ts", "10 minutes").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    sink = f"topk_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 4)) as stream:
+        agg = stream.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type").agg(
+            F.count(F.lit(1)).alias("n_events")
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(replay_dir, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    counts = _sink_table(spark, sink).select(
+        out = _drain_to_memory(spark, agg, "complete")
+    counts = out.select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "event_type",
         "n_events",
@@ -1675,52 +1395,40 @@ def q_stream_bitmap_distinct_replay(spark: SparkSession, sf_dir: str) -> DataFra
     retries via batch_id keying, streaming/core.py
     versioned_upsert_batch). State is O(users/62) words per event type,
     never a raw-id set."""
-    import shutil
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 20000)
-    replay_dir = _replay_tmpdir("etl4s_bitmap_replay_src_")
-    target_base = _replay_tmpdir("etl4s_bitmap_target_")
-    tbl = ev.select("event_id", "event_type", "user_id").toArrow()
-    n = tbl.num_rows
-    step = (n + 2) // 3
-    _stage_replay_files(
-        [tbl.slice(i * step, step) for i in range(3)], replay_dir
-    )
-
-    stream = (
-        spark.readStream.schema(ev.select("event_id", "event_type", "user_id").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay_dir)
-    )
     from etl4s_spark.operators.sketches import bitmap_counts
     from etl4s_spark.streaming.core import versioned_upsert_batch
 
-    versions: list[str] = []
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 20000)
+        .select("event_id", "event_type", "user_id")
+    )
+    with _replay_stream(spark, ev.schema, _slices(ev.toArrow(), 3)) as stream:
+        target_base = _replay_tmpdir("etl4s_bitmap_target_")
+        versions: list[str] = []
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dst = versioned_upsert_batch(
-            spark, target_base, batch_df, batch_id, _bitmap_merge_fn
-        )
-        versions.append(dst)
-
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-        final = (
-            bitmap_counts(spark.read.parquet(versions[-1]), ["event_type"])
-            .select(
-                "event_type",
-                F.col("n_distinct").alias("n_users"),
-                "n_buckets",
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            dst = versioned_upsert_batch(
+                spark, target_base, batch_df, batch_id, _bitmap_merge_fn
             )
-            .orderBy("event_type")
-        )
-        final_tbl = final.toArrow()
-    finally:
-        q.stop()
-        shutil.rmtree(replay_dir, ignore_errors=True)
-        shutil.rmtree(target_base, ignore_errors=True)
+            versions.append(dst)
+
+        q = stream.writeStream.foreachBatch(merge_batch).start()
+        try:
+            q.processAllAvailable()
+            final_tbl = (
+                bitmap_counts(spark.read.parquet(versions[-1]), ["event_type"])
+                .select(
+                    "event_type",
+                    F.col("n_distinct").alias("n_users"),
+                    "n_buckets",
+                )
+                .orderBy("event_type")
+                .toArrow()
+            )
+        finally:
+            q.stop()
+            shutil.rmtree(target_base, ignore_errors=True)
     return (
         spark.createDataFrame(final_tbl)
         .select(
@@ -1766,8 +1474,6 @@ def q_stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     handoff, AND the stream-equals-batch contract are all inside the
     oracle gate. Counts and bigint sums are batch-order-invariant by
     construction, so micro-batch boundaries cannot move the result."""
-    import uuid
-
     from etl4s_spark.sources.pyds import register_synthdocs
 
     register_synthdocs(spark)
@@ -1783,24 +1489,8 @@ def q_stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").cast("long").alias("min_doc"),
         F.max("doc_id").cast("long").alias("max_doc"),
     )
-    sink = f"pyds_replay_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _stream_parts())
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        _sink_table(spark, sink)
+        _drain_to_memory(spark, agg, "complete")
         .select("lang", "n_docs", "total_words", "min_doc", "max_doc")
         .orderBy("lang")
     )

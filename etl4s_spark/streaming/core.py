@@ -19,7 +19,6 @@ This module is the native replacement.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -291,20 +290,29 @@ def run_stream_to_memory(
     df: DataFrame,
     query_name: str,
     output_mode: str = "append",
-    timeout_sec: float = 60.0,
-) -> Any:
+) -> str:
     """Start a memory-sink query, process everything available, stop.
-    Returns the SparkSession-queryable in-memory table name."""
+    Returns the SparkSession-queryable in-memory table name (the sink's
+    temp view; the caller owns it and drops it when done).
+
+    Failure contract: if the stream fails, the query is stopped and the
+    sink's temp view is dropped before the StreamingQueryException
+    propagates, so a failed run leaves no active query and no view."""
     q = (
         df.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
         .start()
     )
-    q.processAllAvailable()
+    try:
+        q.processAllAvailable()
+    except BaseException:
+        q.stop()
+        df.sparkSession.catalog.dropTempView(query_name)
+        raise
     q.stop()
-    q.awaitTermination(int(timeout_sec))
     return query_name
+
 
 class TwsProfileProcessor:
     """Typed-composite-state processor for transformWithStateInPandas

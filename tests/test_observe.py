@@ -1,5 +1,5 @@
 """Observability-layer tests: single-pass ensure gates, observe metrics,
-timed actions (SURVEY.md §2.A22/A28 Spark-side realization)."""
+plan inspection (SURVEY.md §2.A22/A28 Spark-side realization)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl4s_spark.core.validation import ValidationException
-from etl4s_spark.plans import ensure_df, explain_str, observe_counts, run_report, timed_action
+from etl4s_spark.plans import ensure_df, explain_str, observe_counts
 from etl4s_spark.sources.tables import load_table
 
 
@@ -49,18 +49,6 @@ def test_observe_counts_rides_along(spark, sf_dir):
     m = om.get()
     assert m["__rows"] == n
     assert 0 < m["big_qty"] < n
-
-
-def test_timed_action_records_rows_and_time(spark, sf_dir):
-    report = run_report()
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 30)
-    n = timed_action(report, li, lambda df: df.count(), "count_filtered")
-    assert len(report.actions) == 1
-    a = report.actions[0]
-    assert a.description == "count_filtered"
-    assert a.output_rows == n
-    assert a.duration_ms > 0
-    assert report.total_ms >= a.duration_ms
 
 
 def test_explain_str_modes(spark, sf_dir):

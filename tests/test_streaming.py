@@ -5,6 +5,7 @@ stream after all data is processed."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -278,21 +279,94 @@ def test_kafka_option_contract():
     assert opts["kafkaConsumerPollTimeoutMs"] == "2000"
 
 
-@pytest.mark.parametrize("raw", ["", "two", "2.5", "0", "-3"])
-def test_stream_parts_knob_rejects_non_positive_int(monkeypatch, raw):
-    """A bad SPARK_GRAFT_STREAM_SHUFFLE fails at the knob, naming it,
-    instead of inside the planning of every replay query."""
-    from etl4s_spark.queries.streaming_batch import _stream_parts
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", raw)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
-        _stream_parts()
+def _boom(col: str):
+    """``col`` unchanged, except that the row where it equals 1 raises."""
+    return F.when(F.col(col) == 1, F.raise_error(F.lit("boom"))).otherwise(F.col(col))
 
 
-def test_stream_parts_knob_default_and_override(monkeypatch):
-    from etl4s_spark.queries.streaming_batch import _stream_parts
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
-    assert _stream_parts() == "2"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    assert _stream_parts() == "8"
+
+def test_run_stream_to_memory_failure_drops_sink_view(spark, tmp_path):
+    """A stream that fails inside processAllAvailable leaves neither an
+    active query nor the memory sink's temp view behind."""
+    from pyspark.errors import StreamingQueryException
+
+    from etl4s_spark.streaming import run_stream_to_memory
+
+    src = spark.range(3)
+    d = str(tmp_path / "src")
+    src.write.parquet(d)
+    failing = file_stream(spark, d, src.schema).select(_boom("id").alias("id"))
+    with pytest.raises(StreamingQueryException, match="boom"):
+        run_stream_to_memory(failing, "failq")
+    assert "failq" not in _temp_views(spark)
+    assert not spark.streams.active
+
+
+def _assert_replay_left_session_clean(spark, parts, views, replay_root):
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert _temp_views(spark) == views
+    assert not spark.streams.active
+    assert not os.listdir(replay_root)
+
+
+STREAM_REPLAYS = [
+    "q_stream_bitmap_distinct_replay",
+    "q_stream_dedup_replay",
+    "q_stream_dedup_wm_replay",
+    "q_stream_join_replay",
+    "q_stream_pyds_replay",
+    "q_stream_session_replay",
+    "q_stream_sink_replay",
+    "q_stream_sliding_replay",
+    "q_stream_state_replay",
+    "q_stream_static_join_replay",
+    "q_stream_topk_replay",
+    "q_stream_tumbling_replay",
+    "q_stream_upsert_replay",
+    "q_stream_watermark_replay",
+]
+
+
+def test_stream_replay_list_covers_registry():
+    from etl4s_spark.queries import QUERIES, load_all
+
+    load_all()
+    declared = {n for n in QUERIES if n.startswith("q_stream_") and n.endswith("_replay")}
+    assert declared == set(STREAM_REPLAYS)
+
+
+@pytest.mark.parametrize("name", STREAM_REPLAYS)
+def test_stream_replay_matches_oracle_and_cleans_up(
+    spark, sf_dir, duck, monkeypatch, tmp_path, name
+):
+    """Each replay's final state equals its DuckDB oracle, and the replay
+    restores the session's shuffle partitions and leaves no temp view,
+    no active query and no staged or sink files."""
+    from conftest import compare_to_oracle
+
+    from etl4s_spark.queries import ORACLES, QUERIES, load_all
+
+    load_all()
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_TMP", str(tmp_path))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    views = _temp_views(spark)
+    compare_to_oracle(QUERIES[name](spark, sf_dir), duck, ORACLES[name])
+    _assert_replay_left_session_clean(spark, parts, views, tmp_path)
+
+
+def test_replay_helpers_clean_up_after_failed_stream(spark, monkeypatch, tmp_path):
+    from pyspark.errors import StreamingQueryException
+
+    from etl4s_spark.queries.streaming_batch import _drain_to_memory, _replay_stream
+
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_TMP", str(tmp_path))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    views = _temp_views(spark)
+    src = spark.range(3)
+    with pytest.raises(StreamingQueryException, match="boom"):
+        with _replay_stream(spark, src.schema, [src.toArrow()]) as stream:
+            _drain_to_memory(spark, stream.select(_boom("id").alias("id")), "append")
+    _assert_replay_left_session_clean(spark, parts, views, tmp_path)
