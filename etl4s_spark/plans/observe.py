@@ -88,4 +88,3 @@ def ensure_df(
         else:
             raise ValidationException(failures)
     return df
-

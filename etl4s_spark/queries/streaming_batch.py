@@ -9,9 +9,9 @@ That equivalence is the correctness argument Structured Streaming is
 built on (stream = unbounded table).
 
 The ``q_stream_*_replay`` queries put that argument under the oracle
-gate: each one streams a bounded events slice and returns the final
-state, which must equal the one-shot SQL. A replay is built from four
-helpers over the streaming layer (streaming/core.py):
+gate: each one streams a bounded input and returns the final state,
+which must equal the one-shot SQL. A replay is built from four helpers
+over the streaming layer (streaming/core.py):
 
 - ``_replay_stream(spark, schema, batches)`` stages Arrow tables as
   ordered single-file micro-batches, yields a ``file_stream`` paced at
