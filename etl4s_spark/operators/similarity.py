@@ -658,8 +658,8 @@ def embedding_neardup_lsh(
     at ANY plane count, so true-duplicate recall stays plane-count-
     invariant; the near-threshold operating curve under shipped
     defaults is measured with planted cosine-0.95/0.92 pairs above the
-    boundary (EMB_DEFAULT_SCALING `recall` lanes; probe
-    tools/emb_default_scale_probe.py; measured == formula within the
+    boundary (EMB_DEFAULT_SCALING.json `recall` lanes, a frozen probe
+    record; measured == formula within the
     1024-pair sampling error at every lane):
 
         n     planes tables | @.95 pred/meas | @.92 pred/meas | fixed-4 @.95

@@ -26,9 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-_LOADED = False
-
-
 def query(name: str, oracle: str | None = None):
     def deco(fn):
         QUERIES[name] = fn
@@ -39,86 +36,9 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def _driver_last_proven() -> dict[str, int]:
-    """Map query name -> the LATEST round in which the driver proved it
-    (green oracle match, or a recorded rows-only check for no-oracle
-    queries). Names absent from the map have never been proven.
-
-    The driver checks only the first ~50 registered queries per round, in
-    registration order. Sorting by (last-proven round asc) puts never-proven
-    queries first (coverage) and then least-recently-proven ones (regression
-    detection — VERDICT r2 item 4), so the window cycles through the whole
-    surface across rounds instead of starving old queries.
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    last: dict[str, int] = {}
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            # A rows-only row with spark_rows == 0 is VACUOUS (VERDICT r5
-            # "What's wrong" #2: q_graph_kcore's only record proved nothing)
-            # — it does not count as proven, so the query re-enters the
-            # front of the driver window.
-            proven = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle" and bool(row.get("spark_rows"))
-            )
-            if proven:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def _registration_age() -> dict[str, int]:
-    """Map query name -> the round in which it was FIRST registered
-    (derived once from per-round bench/correctness artifacts and frozen in
-    registry_age.json). Names absent from the file (i.e. queries added
-    after the freeze) default to 999 so they queue BEHIND existing
-    verification debt — VERDICT r5 item 1: never-proven queries are
-    driver-checked oldest-registration-first, so new additions cannot
-    queue-jump old unproven ones."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "registry_age.json")
-    try:
-        with open(path) as f:
-            return {k: int(v) for k, v in json.load(f).items()}
-    except (OSError, ValueError):
-        return {}
-
-
-# Queries whose most recent driver proof predates a repair that changed
-# their behavior — forced to the front of the registration order so the
-# driver's ~50-query window re-proves them in the next round, then removed
-# once green rows land. Round 7: the round-6 set (q_join_anti,
-# q_window_rank_movers, q_tpch_q11, q_dedup_containment — all de-vacuified
-# in r6) landed green hash-match rows in CORRECTNESS_r06.json, so the set
-# is empty again. Re-add any query whose semantics change after its last
-# driver proof, then re-run tools/emit_verify_priority.py.
-# Round 10: q_dedup_embedding_lsh's operator default changed (pair cap
-# ON — output verified identical at all three test SFs, but the shipped
-# semantics changed, so its r-old rows-only proof predates the change).
-_REPROVE_FIRST: frozenset = frozenset({"q_dedup_embedding_lsh"})
-
-
 def load_all() -> None:
-    """Import every query module (side effect: registration), then reorder
-    the registry so driver-unproven queries register first."""
-    global _LOADED
-    if _LOADED:
-        return
+    """Import every query module (side effect: registration). The order
+    the driver sees is applied in ``__spark_entry__.py``."""
     from etl4s_spark.queries import (  # noqa: F401
         aggregates,
         analytics,
@@ -142,25 +62,3 @@ def load_all() -> None:
         webtext,
         windows,
     )
-
-    last_proven = _driver_last_proven()
-    age = _registration_age()
-    # stable sort: repaired-this-round first (their past proof predates the
-    # repair, so the driver must re-prove them NOW — VERDICT r3 item 2),
-    # then never-proven (0) ordered OLDEST-REGISTRATION-FIRST (VERDICT r5
-    # item 1: the old tie-break was module import order, which let round-5
-    # queries in alphabetically-earlier modules queue-jump the 8 round-4
-    # leftovers for two consecutive rounds), then oldest-proven rounds —
-    # r1-proven queries re-enter the driver window before r2-proven ones.
-    ordered = sorted(
-        QUERIES,
-        key=lambda n: (n not in _REPROVE_FIRST, last_proven.get(n, 0), age.get(n, 999)),
-    )
-    # mutate in place — callers hold references to these dict objects
-    reordered_q = {n: QUERIES[n] for n in ordered}
-    reordered_o = {n: ORACLES[n] for n in ordered if n in ORACLES}
-    QUERIES.clear()
-    QUERIES.update(reordered_q)
-    ORACLES.clear()
-    ORACLES.update(reordered_o)
-    _LOADED = True

@@ -120,6 +120,11 @@ def get_spark(
         # one every 5 min instead of the 30-min default so block-manager
         # residue from hundreds of queries cannot pile up.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        # A stream without a checkpointLocation (the memory-sink replays)
+        # gets a temporary-<uuid> dir under java.io.tmpdir, which Spark
+        # deletes on stop only if the query did not fail; a failed one
+        # would stay on disk for the rest of the session.
+        .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
     )
     java_options = list(_JIT_OPTIONS)
     if local_dir:

@@ -290,19 +290,28 @@ def _temp_views(spark) -> set[str]:
 
 def test_run_stream_to_memory_failure_drops_sink_view(spark, tmp_path):
     """A stream that fails inside processAllAvailable leaves neither an
-    active query nor the memory sink's temp view behind."""
+    active query, nor the memory sink's temp view, nor its temporary
+    checkpoint dir (``temporary-<uuid>`` under the driver's
+    java.io.tmpdir) behind."""
     from pyspark.errors import StreamingQueryException
 
     from etl4s_spark.streaming import run_stream_to_memory
+
+    tmpdir = spark._jvm.java.lang.System.getProperty("java.io.tmpdir")
+
+    def temp_checkpoints() -> set[str]:
+        return {n for n in os.listdir(tmpdir) if n.startswith("temporary-")}
 
     src = spark.range(3)
     d = str(tmp_path / "src")
     src.write.parquet(d)
     failing = file_stream(spark, d, src.schema).select(_boom("id").alias("id"))
+    before = temp_checkpoints()
     with pytest.raises(StreamingQueryException, match="boom"):
         run_stream_to_memory(failing, "failq")
     assert "failq" not in _temp_views(spark)
     assert not spark.streams.active
+    assert not temp_checkpoints() - before
 
 
 def _assert_replay_left_session_clean(spark, parts, views, replay_root):

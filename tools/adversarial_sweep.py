@@ -23,7 +23,7 @@ collects without raising. Row counts are recorded so vacuity is
 auditable.
 
 Usage:
-    python tools/adversarial_sweep.py --variant zero  [-o ADVERSARIAL_r07.json]
+    python tools/adversarial_sweep.py --variant zero  [-o OUT.json]
     python tools/adversarial_sweep.py --variant nulls [-o ...]
     python tools/adversarial_sweep.py --variant both  [-o ...]   # default
 """
@@ -39,18 +39,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from tools.harness import TABLES, run_query  # noqa: E402
 
 # (table, column) -> 1-in-k null rate keyed on a stable id column
 _NULL_SPECS = {
@@ -79,15 +68,13 @@ def build_variant(spark, sf_dir: str, variant: str, out_dir: str) -> None:
 
 
 def sweep(spark, variant_dir: str, names: list[str]) -> dict:
-    from etl4s_spark.queries import QUERIES
-
     out: dict[str, dict] = {}
     for name in names:
-        try:
-            rows = QUERIES[name](spark, variant_dir).collect()
-            out[name] = {"ok": True, "rows": len(rows)}
-        except Exception as e:  # noqa: BLE001 — the crash IS the finding
-            out[name] = {"ok": False, "err": f"{type(e).__name__}: {e}"[:300]}
+        rec = run_query(spark, name, variant_dir, "collect")
+        if rec["error"]:  # the crash IS the finding
+            out[name] = {"ok": False, "err": rec["error"][:300]}
+        else:
+            out[name] = {"ok": True, "rows": rec["rows"]}
         print(
             f"{'PASS' if out[name]['ok'] else 'CRASH'} {name} "
             f"{out[name].get('rows', out[name].get('err'))}",
@@ -109,7 +96,7 @@ def main() -> None:
 
     load_all()
     spark = get_spark("adversarial_sweep")
-    names = args.names or list(QUERIES)
+    names = args.names or sorted(QUERIES)
     variants = ("zero", "nulls") if args.variant == "both" else (args.variant,)
 
     doc: dict = {"sf_base": args.sf, "variants": {}}

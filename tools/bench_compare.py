@@ -1,54 +1,51 @@
-"""Cross-round bench comparison under the BASELINE.md rules.
+"""Compare two bench detail files (``bench.py``'s BENCH_DETAIL_*.json).
 
-Compares two BENCH_DETAIL files per-query using the sum of WARM MEDIANS
-over the INTERSECTION of queries with non-error medians in BOTH files —
-the rule ADVICE r3 forced after error sentinels (-1.0) summed into a
-total inverted a conclusion, and VERDICT r4 re-applied after machine
-contention inflated absolute numbers.
+Two reports:
 
-Also reports per-query ratio outliers (>2x either way) so "regression
-vs data-drift vs contention" is decidable from artifacts: a broad
-uniform inflation across unrelated queries is contention; a single
-query moving alone is code or data.
+- WALL TIME: the sum of WARM MEDIANS over the INTERSECTION of queries
+  with non-error medians in BOTH files — the rule ADVICE r3 forced after
+  error sentinels (-1.0) summed into a total inverted a conclusion — and
+  per-query ratio outliers (>2x either way), so "regression vs
+  data-drift vs contention" is decidable from artifacts: a broad uniform
+  inflation across unrelated queries is contention; a single query
+  moving alone is code or data.
+- COUNTERS: for every query with harness records in both files, the
+  exact change in ``build_jobs``, ``exec_jobs``, ``build_tasks`` and
+  ``exec_tasks`` (each the low median over the warm runs). These do not
+  swing with box load, so a change here is code or data, never noise.
 
-Two gate rules encoded here (VERDICT r6 item 7 + ADVICE r6):
+Two gate rules on the wall-time report (VERDICT r6 item 7 + ADVICE r6):
 
-- MEASUREMENT-VERSION GUARD: BENCH_DETAIL files carry
-  ``schema_version`` (2 = noop-write full-plan execution, r6+; absent =
-  count()-based, r<=5, partially pruned by Catalyst). Comparing across
-  versions is meaningless — the tool REFUSES unless --allow-mixed.
+- MEASUREMENT-VERSION GUARD: detail files carry ``schema_version`` (2 =
+  noop-write full-plan execution, r6+; absent = count()-based, r<=5,
+  partially pruned by Catalyst). Comparing across versions is
+  meaningless — the tool REFUSES unless --allow-mixed.
 
 - SUB-SECOND NOISE RULE: a 2x-gate breach where EITHER median is below
   ``--noise-floor`` seconds (default 0.5) is NOT a confirmed regression
   — the warm-JVM run spread on this box is +-0.3-0.9 s, which alone
   produces 1.5-2x ratios on sub-second queries (r6 false alarms:
   q_scalar_variant 0.24->0.37, q_bpe_pair_counts 0.30->0.46). Such
-  breaches are bucketed separately as ``needs_idle_remeasure`` and only
-  count as regressions after an idle re-measure (re-run bench.py for
-  just those queries on a quiet box) reproduces the ratio.
-  VERDICT r7 closed a coverage hole in the original BOTH-medians form:
-  contention can inflate a sub-second baseline median PAST the floor
-  (q_text_quality 0.30->1.71 s at loadavg 6.3; idle re-measure 0.33 s),
-  escaping the bucket exactly when it matters.
-
-- LOADAVG CONTENTION RULE (VERDICT r7 item 3): when either file records
-  ``loadavg_1min_at_run_start`` above ``--loadavg-threshold`` (default
-  2.0), ALL 2x breaches route to ``needs_idle_remeasure`` regardless of
-  median size — a loaded box cannot confirm a regression at any
-  magnitude (the r7 bench ran at loadavg 5.9-6.7 and produced three
-  false alarms, all idle-re-measured back to baseline).
+  breaches are bucketed separately as ``needs_idle_remeasure``; read
+  the counter report for those queries, and re-measure them
+  interleaved (tools/probe_queries.py) before calling them regressions.
+  Either median, not both: contention can inflate a sub-second baseline
+  median PAST the floor (VERDICT r7: q_text_quality 0.30->1.71 s, idle
+  re-measure 0.33 s).
 
 Usage:
     python tools/bench_compare.py OLD_DETAIL.json NEW_DETAIL.json \
-        [--outlier 2.0] [--noise-floor 0.5] [--loadavg-threshold 2.0] \
-        [--allow-mixed]
+        [--outlier 2.0] [--noise-floor 0.5] [--allow-mixed]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import statistics
 import sys
+
+COUNTERS = ("build_jobs", "exec_jobs", "build_tasks", "exec_tasks")
 
 
 def load(path: str) -> dict:
@@ -65,6 +62,36 @@ def medians(d: dict) -> dict[str, float]:
     }
 
 
+def counters(d: dict) -> dict[str, dict[str, int]]:
+    """Per query, each counter's low median over the warm runs of its
+    error-free records."""
+    out = {}
+    for q, recs in d.get("records", {}).items():
+        if not recs or any(r["error"] for r in recs):
+            continue
+        warm = recs[1:] if len(recs) > 1 else recs
+        out[q] = {c: statistics.median_low(r[c] for r in warm) for c in COUNTERS}
+    return out
+
+
+def counter_report(dold: dict, dnew: dict) -> dict:
+    old, new = counters(dold), counters(dnew)
+    common = sorted(set(old) & set(new))
+    changed = []
+    for q in common:
+        diff = {c: [old[q][c], new[q][c]] for c in COUNTERS if old[q][c] != new[q][c]}
+        if diff:
+            changed.append({"query": q, **diff})
+    return {
+        "n_common_records": len(common),
+        "totals": {
+            c: [sum(old[q][c] for q in common), sum(new[q][c] for q in common)]
+            for c in COUNTERS
+        },
+        "changed": changed,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
@@ -74,15 +101,8 @@ def main() -> None:
         "--noise-floor",
         type=float,
         default=0.5,
-        help="both-medians-below-this 2x breaches are flagged for idle "
+        help="2x breaches with either median below this are flagged for "
         "re-measure instead of counted as regressions",
-    )
-    ap.add_argument(
-        "--loadavg-threshold",
-        type=float,
-        default=2.0,
-        help="if either file's loadavg_1min_at_run_start exceeds this, "
-        "ALL 2x breaches route to idle re-measure (contended run)",
     )
     ap.add_argument(
         "--allow-mixed",
@@ -135,65 +155,20 @@ def main() -> None:
         for k in common
         if new[k] > 0.05 and old[k] / new[k] > args.outlier
     )
-    # sub-second noise rule: a breach where EITHER median sits under the
-    # noise floor cannot be distinguished from run spread (contention can
-    # push the inflated side PAST the floor — VERDICT r7). Loadavg rule:
-    # a breach whose query ran at loadavg above the threshold (in either
-    # file; per-query lists, max over runs) routes to idle re-measure at
-    # ANY magnitude — a loaded box cannot confirm a regression.
-    def per_query_load(d: dict) -> dict[str, float]:
-        la = d.get("loadavg_1min_at_run_start")
-        if isinstance(la, (int, float)):  # file-level scalar (older files)
-            return {"__file__": float(la)}
-        if isinstance(la, dict):
-            return {
-                k: max(v) if isinstance(v, list) and v else float(v)
-                for k, v in la.items()
-                if isinstance(v, (int, float, list)) and v
-            }
-        return {}
 
-    lold, lnew = per_query_load(dold), per_query_load(dnew)
-    file_old = lold.get("__file__", max(lold.values(), default=None))
-    file_new = lnew.get("__file__", max(lnew.values(), default=None))
-    out["loadavg_max_old"] = round(file_old, 2) if file_old is not None else None
-    out["loadavg_max_new"] = round(file_new, 2) if file_new is not None else None
+    def noisy(o: float, n: float) -> bool:
+        return o < args.noise_floor or n < args.noise_floor
 
-    def query_load(k: str) -> float:
-        # fallback for a query missing from a per-query dict is the FILE
-        # level max (per-query dicts never contain "__file__" — ADVICE
-        # r8: a 0.0 fallback let unrecorded queries dodge the
-        # contention re-measure routing)
-        return max(
-            lold.get(k, lold.get("__file__", file_old or 0.0)),
-            lnew.get(k, lnew.get("__file__", file_new or 0.0)),
-        )
-
-    def needs_remeasure(x):
-        return (
-            x[2] < args.noise_floor
-            or x[3] < args.noise_floor
-            or query_load(x[1]) > args.loadavg_threshold
-        )
-
-    confirmed = [x for x in slower if not needs_remeasure(x)]
-    remeasure = [x for x in slower if needs_remeasure(x)]
     out["slower_than_%sx" % args.outlier] = [
-        {"query": k, "old": o, "new": n, "x": r} for r, k, o, n in confirmed
+        {"query": k, "old": o, "new": n, "x": r} for r, k, o, n in slower if not noisy(o, n)
     ]
     out["needs_idle_remeasure"] = [
-        {
-            "query": k,
-            "old": o,
-            "new": n,
-            "x": r,
-            "loadavg": round(query_load(k), 2),
-        }
-        for r, k, o, n in remeasure
+        {"query": k, "old": o, "new": n, "x": r} for r, k, o, n in slower if noisy(o, n)
     ]
     out["faster_than_%sx" % args.outlier] = [
         {"query": k, "old": o, "new": n, "x": r} for r, k, o, n in faster[::-1]
     ]
+    out["counters"] = counter_report(dold, dnew)
     print(json.dumps(out, indent=1))
 
 

@@ -15,6 +15,11 @@ count the plan features that decide 100 TB behavior:
 
 Usage:
     python tools/plan_audit.py [--sf /root/testdata/sf0.001] [-o PLAN_AUDIT.json]
+    python tools/plan_audit.py --sf /root/testdata/sf0.1 -o plans/r13/before q_a q_b
+
+The second form writes each named query's ``explain("formatted")`` text
+to ``<dir>/<query>.txt`` for before/after plan diffs, and prints the
+totals.
 
 Queries that EXECUTE during construction (streaming replays, sink
 round-trips, maintenance rewrites, eagerly-materialized iterative
@@ -34,6 +39,8 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.harness import run_query  # noqa: E402
 
 # construction has side effects (writes/streams/tables) — not static plans
 SKIP_PREFIXES = (
@@ -133,46 +140,48 @@ def count_unbounded_partitionless_windows(simple_plan: str) -> int:
     return flagged
 
 
-def audit(sf_dir: str, names: list[str] | None = None) -> dict:
-    from etl4s_spark.queries import QUERIES, load_all
-    from etl4s_spark.session import get_spark
-
-    load_all()
-    spark = get_spark()
-    out: dict[str, dict] = {}
-    targets = names or list(QUERIES)
-    for name in targets:
-        if any(name.startswith(p) for p in SKIP_PREFIXES):
-            out[name] = {"skipped": "constructs side effects (streams/sinks)"}
-            continue
-        try:
-            df = QUERIES[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            simple = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # noqa: BLE001 — audit must not die mid-sweep
-            out[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
-            continue
-        tree = plan.split("\n\n")[0]
-        row = {
-            k: len(re.findall(pat, tree, flags=re.MULTILINE))
-            for k, pat in FEATURES.items()
-        }
-        row["unbounded_partitionless_windows"] = (
-            count_unbounded_partitionless_windows(simple)
-        )
-        out[name] = row
-    return out
+def audit_plan(formatted: str, simple: str) -> dict:
+    """Feature counts of one query's formatted plan, plus the window gate
+    on its simple tree string."""
+    tree = formatted.split("\n\n")[0]
+    row = {
+        k: len(re.findall(pat, tree, flags=re.MULTILINE))
+        for k, pat in FEATURES.items()
+    }
+    row["unbounded_partitionless_windows"] = count_unbounded_partitionless_windows(simple)
+    return row
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("-o", "--out", default=None)
+    ap.add_argument(
+        "-o",
+        "--out",
+        default=None,
+        help="a .json path gets the audit; any other path is a directory "
+        "that gets each audited query's formatted plan as <query>.txt",
+    )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
-    rows = audit(args.sf, args.names or None)
+
+    from etl4s_spark.queries import QUERIES, load_all
+    from etl4s_spark.session import get_spark
+
+    load_all()
+    spark = get_spark("plan_audit")
+    rows: dict[str, dict] = {}
+    plans: dict[str, str] = {}
+    for name in args.names or sorted(QUERIES):
+        if any(name.startswith(p) for p in SKIP_PREFIXES):
+            rows[name] = {"skipped": "constructs side effects (streams/sinks)"}
+            continue
+        rec = run_query(spark, name, args.sf, "plan")
+        if rec["error"]:  # the audit must not die mid-sweep
+            rows[name] = {"error": rec["error"][:200]}
+            continue
+        plans[name], simple = rec["result"]
+        rows[name] = audit_plan(plans[name], simple)
 
     audited = {k: v for k, v in rows.items() if "skipped" not in v and "error" not in v}
     totals = {
@@ -190,14 +199,19 @@ def main() -> None:
             sum(v["exchanges"] for v in audited.values()) / max(1, len(audited)), 2
         ),
     }
-    doc = {"sf": args.sf, "totals": totals, "queries": rows}
-    text = json.dumps(doc, indent=1, sort_keys=True)
-    if args.out:
+    text = json.dumps({"sf": args.sf, "totals": totals, "queries": rows}, indent=1, sort_keys=True)
+    if not args.out:
+        print(text)
+        return
+    if args.out.endswith(".json"):
         with open(args.out, "w") as f:
             f.write(text + "\n")
-        print(json.dumps(totals))
     else:
-        print(text)
+        os.makedirs(args.out, exist_ok=True)
+        for name, plan in plans.items():
+            with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
+                f.write(plan)
+    print(json.dumps(totals))
 
 
 if __name__ == "__main__":

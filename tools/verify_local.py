@@ -14,15 +14,10 @@ import argparse
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
 
 
 def canon_value(v) -> str:
@@ -88,6 +83,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from etl4s_spark.session import get_spark
+    from tools.harness import TABLES, run_query
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -105,20 +101,18 @@ def main() -> int:
             results[name] = {"status": "fail", "err": "not_registered"}
             n_fail += 1
             continue
-        t0 = time.monotonic()
-        try:
-            sdf = qs[name](spark, args.sf)
-            scols = sorted(sdf.columns)
-            # go through pandas like the driver does — dtype coercions
-            # (nullable int → float64, etc.) are part of what we verify
-            spdf = sdf.toPandas()[scols]
-            srows = [tuple(row) for row in spdf.itertuples(index=False, name=None)]
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
-            results[name] = {"status": "fail", "err": f"spark:{type(e).__name__}"}
+        # go through pandas like the driver does — dtype coercions
+        # (nullable int → float64, etc.) are part of what we verify
+        rec = run_query(spark, name, args.sf, "pandas")
+        if rec["error"]:
+            print(f"FAIL {name}: spark error: {rec['error']}")
+            results[name] = {"status": "fail", "err": "spark:" + rec["error"].split(":")[0]}
             n_fail += 1
             continue
-        dt = time.monotonic() - t0
+        scols = sorted(rec["result"].columns)
+        spdf = rec["result"][scols]
+        srows = [tuple(row) for row in spdf.itertuples(index=False, name=None)]
+        dt = rec["build_s"] + rec["exec_s"]
         if name not in oracles:
             print(f"ok?  {name}: rows-only ({len(srows)} rows, {dt:.1f}s)")
             results[name] = {
