@@ -156,7 +156,6 @@ def bfs_hops(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_hops: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distance over an undirected edge list — the
     Spark answer to SQL's recursive CTE (``WITH RECURSIVE``), which
@@ -176,38 +175,31 @@ def bfs_hops(
     Scale posture: each round is one shuffle join (frontier ⨝ edges on
     src) + one anti-join on id — both partition on node ids, and the
     frontier is always the SMALLEST of the three frames, so AQE
-    broadcasts it when a level is narrow. Per-round checkpointing keeps
-    the plan constant-size (reliable checkpoint with ``checkpoint_dir``
-    on a real cluster, localCheckpoint otherwise); the per-round
-    driver action is one count() on the frontier — the loop-termination
-    probe a recursive CTE engine does internally.
+    broadcasts it when a level is narrow. Per-round eager
+    localCheckpoints keep the plan constant-size. The loop-termination
+    probe a recursive CTE engine does internally is the frontier's size,
+    which rides on ``DataFrame.observe`` of the new level and is read
+    when the level's checkpoint runs: no separate count() action.
     """
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _persist(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint(eager=True)
-            if checkpoint_dir is not None
-            else df.localCheckpoint(eager=True)
-        )
-
-    edges = _persist(symmetrize(pairs, id_a, id_b).distinct())
-    dist = _persist(seeds.select(F.col(seeds.columns[0]).alias("id")).distinct().select(
+    edges = symmetrize(pairs, id_a, id_b).distinct().localCheckpoint(eager=True)
+    dist = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct().select(
         "id", F.lit(0).cast("long").alias("hops")
-    ))
+    ).localCheckpoint(eager=True)
     frontier = dist.select("id")
     for h in range(1, max_hops + 1):
-        nxt = _persist(
+        level = Observation()
+        nxt = (
             frontier.join(edges, frontier["id"] == edges["src"])
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(dist.select("id"), "id", "left_anti")
             .select("id", F.lit(h).cast("long").alias("hops"))
+            .observe(level, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
-        if nxt.count() == 0:
+        if level.get["n"] == 0:
             break
-        dist = _persist(dist.union(nxt))
+        dist = dist.union(nxt).localCheckpoint(eager=True)
         frontier = nxt.select("id")
     return dist
 

@@ -877,7 +877,7 @@ def l2_normalize(vec: Column, norm: Column) -> Column:
     return F.transform(vec, lambda x: F.when(norm > 0, x / norm).otherwise(x))
 
 
-def _sq_l2(a: Column, b: Column) -> Column:
+def sq_l2(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -1189,7 +1189,7 @@ def pq_topk(
             # distance from the query to EVERY codeword
             F.transform(
                 F.col("__pqcb"),
-                lambda e: _sq_l2(
+                lambda e: sq_l2(
                     e["cvec"], F.slice(F.col("__qv"), e["m"] * sub + 1, sub)
                 ),
             ).alias("__lut"),

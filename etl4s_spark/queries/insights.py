@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from etl4s_spark.functions.exact import d38
 from etl4s_spark.operators.ranking import one_part
+from etl4s_spark.operators.similarity import sq_l2
 from etl4s_spark.queries import query
 from etl4s_spark.sources.tables import load_table
 
@@ -767,11 +768,7 @@ def q_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = e.filter(F.col("vec_id") < 500).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("vec"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_l2(F.col("vec"), F.col("cvec"))
     dists = vecs.join(F.broadcast(cent)).select(
         "vec_id",
         "centroid_id",

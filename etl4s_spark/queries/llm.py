@@ -10,7 +10,7 @@ tests/test_llm_ops.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
@@ -26,6 +26,7 @@ from etl4s_spark.operators.dedup import (
 from etl4s_spark.operators.similarity import (
     as_double,
     cosine_topk,
+    dot,
     embedding_neardup_lsh,
     embedding_neardup_pairs,
     ivf_topk,
@@ -33,6 +34,7 @@ from etl4s_spark.operators.similarity import (
     lsh_bucketed_topk,
     pq_topk,
     semdedup,
+    sq_l2,
 )
 from etl4s_spark.operators.text import (
     STOPWORDS,
@@ -2725,9 +2727,16 @@ def q_dedup_minhash_checkable(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall floors; THIS query proves the banding ALGORITHM itself
     end-to-end. Same plan shape: one (band_idx, band_key) shuffle
     proposes, pair-group counts shared bands."""
-    from etl4s_spark.operators.parallelism import widen
-    from etl4s_spark.operators.text import normalize_text
+    return _minhash_checkable_pairs(_checkable_shingles(spark, sf_dir)).orderBy(
+        "id_a", "id_b"
+    )
 
+
+def _checkable_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy exploded (doc_id, s) relation of each document's distinct
+    word 3-shingles, the shingling the checkable MinHash oracles re-derive.
+    A document of fewer than 3 words has NO shingles (an empty array),
+    where operators.text.shingles keeps the whole text as one shingle."""
     d = load_table(spark, sf_dir, "documents")
     w = F.split(normalize_text(F.col("text")), " ")
     shingles = F.when(
@@ -2739,10 +2748,9 @@ def q_dedup_minhash_checkable(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
-    sh = widen(d.select("doc_id", "text"), "doc_id").select(
+    return widen(d.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(shingles).alias("s")
     )
-    return _minhash_checkable_pairs(sh).orderBy("id_a", "id_b")
 
 
 def _minhash_checkable_pairs(sh: DataFrame) -> DataFrame:
@@ -2792,6 +2800,52 @@ def _minhash_checkable_pairs(sh: DataFrame) -> DataFrame:
         .filter(F.col("doc_id") < F.col("id_b"))
         .groupBy(F.col("doc_id").alias("id_a"), "id_b")
         .agg(F.count_distinct("band_idx").cast("long").alias("n_shared_bands"))
+    )
+
+
+def _int_plane_bands(spark: SparkSession, e: DataFrame, n_planes: int) -> DataFrame:
+    """The integer-exact hyperplane band index of the checkable LSH
+    family, lazy: (vec_id, band_idx, band_key) with one 8-bit key per 8
+    planes. Plane coefficients are md5-derived signed 31-bit integers and
+    the 64-dim embedding is milli-quantized, so each sign bit is an exact
+    BIGINT dot product and the oracles re-derive identical keys. Planes
+    are generated executor-side by spark.range and broadcast onto the
+    exploded corpus; bits and bands are map-side-combined integer
+    aggregates."""
+    planes = spark.range(n_planes * 64).selectExpr(
+        "CAST(id div 64 AS INT) AS p",
+        "CAST(id % 64 AS INT) AS d",
+        "CAST(conv(substring(md5(concat('pl:', CAST(id div 64 AS STRING), ':', "
+        "CAST(id % 64 AS STRING))), 1, 8), 16, 10) AS BIGINT) - 2147483648 AS coeff",
+    )
+    # widen before the ×64 posexplode × plane fan-out: fused into the
+    # single-split scan the integer-dot expansion runs on one core
+    # (guide §2; no-op on wide scans)
+    el = widen(e.select("vec_id", "embedding"), "vec_id").select(
+        "vec_id", F.posexplode("embedding").alias("d", "v")
+    ).select(
+        "vec_id", "d", F.round(F.col("v").cast("double") * 1000).cast("long").alias("q")
+    )
+    return (
+        el.join(F.broadcast(planes), "d")
+        .groupBy("vec_id", "p")
+        .agg(F.when(F.sum(F.col("q") * F.col("coeff")) >= 0, 1).otherwise(0).alias("bit"))
+        .groupBy("vec_id", F.expr("p div 8").alias("band_idx"))
+        .agg(F.sum(F.expr("bit * shiftleft(1, p % 8)")).alias("band_key"))
+    )
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) sharing any band key: the
+    band self-join that proposes."""
+    return (
+        bands.join(
+            bands.select(F.col("vec_id").alias("id_b"), "band_idx", "band_key"),
+            ["band_idx", "band_key"],
+        )
+        .filter(F.col("vec_id") < F.col("id_b"))
+        .select(F.col("vec_id").alias("id_a"), "id_b")
+        .distinct()
     )
 
 
@@ -2853,48 +2907,8 @@ def q_dedup_embedding_lsh_checkable(spark: SparkSession, sf_dir: str) -> DataFra
     corpus; bits/bands are map-side-combined integer aggregates; the
     band self-join proposes; broadcast-joined embeddings verify."""
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    planes = (
-        spark.range(32 * 64)
-        .selectExpr(
-            "CAST(id div 64 AS INT) AS p",
-            "CAST(id % 64 AS INT) AS d",
-            "CAST(conv(substring(md5(concat('pl:', CAST(id div 64 AS STRING), ':', "
-            "CAST(id % 64 AS STRING))), 1, 8), 16, 10) AS BIGINT) - 2147483648 AS coeff",
-        )
-    )
-    from etl4s_spark.operators.parallelism import widen
-
-    # widen before the ×64 posexplode ×32 plane fan-out: fused into the
-    # single-split scan it runs the whole 1M-row integer dot expansion on
-    # one core (guide §2; no-op on wide scans)
-    el = widen(e.select("vec_id", "embedding"), "vec_id").select(
-        "vec_id", F.posexplode("embedding").alias("d", "v")
-    ).select(
-        "vec_id", "d", F.round(F.col("v").cast("double") * 1000).cast("long").alias("q")
-    )
-    bits = (
-        el.join(F.broadcast(planes), "d")
-        .groupBy("vec_id", "p")
-        .agg(
-            F.when(F.sum(F.col("q") * F.col("coeff")) >= 0, 1).otherwise(0).alias("bit")
-        )
-    )
-    bands = bits.groupBy(
-        "vec_id", F.expr("p div 8").alias("band_idx")
-    ).agg(F.sum(F.expr("bit * shiftleft(1, p % 8)")).alias("band_key"))
-    b2 = bands.select(
-        F.col("vec_id").alias("id_b"), "band_idx", "band_key"
-    )
-    cand = (
-        bands.join(b2, ["band_idx", "band_key"])
-        .filter(F.col("vec_id") < F.col("id_b"))
-        .select(F.col("vec_id").alias("id_a"), "id_b")
-        .distinct()
-    )
+    cand = _band_pairs(_int_plane_bands(spark, e, 32))
     emb = e.select("vec_id", "embedding")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     # norms hoisted per ROW (same left-fold float sequence per vector →
     # bit-identical cos), so the verify stage pays one dot per pair
     x = emb.select(
@@ -3169,28 +3183,7 @@ def q_sim_ann_lsh_checkable(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor). Same funnel at 100 TB: band keys are the corpus index;
     queries broadcast; only candidate buckets are scored."""
     e = load_table(spark, sf_dir, "embeddings")
-    planes = spark.range(16 * 64).selectExpr(
-        "CAST(id div 64 AS INT) AS p",
-        "CAST(id % 64 AS INT) AS d",
-        "CAST(conv(substring(md5(concat('pl:', CAST(id div 64 AS STRING), ':', "
-        "CAST(id % 64 AS STRING))), 1, 8), 16, 10) AS BIGINT) - 2147483648 AS coeff",
-    )
-    # widen before the ×64 posexplode × plane fan-out: fused into the
-    # single-split scan the integer-dot expansion runs on one core
-    # (guide §2; no-op on wide scans)
-    el = widen(e.select("vec_id", "embedding"), "vec_id").select(
-        "vec_id", F.posexplode("embedding").alias("d", "v")
-    ).select(
-        "vec_id", "d", F.round(F.col("v").cast("double") * 1000).cast("long").alias("q")
-    )
-    bands = (
-        el.join(F.broadcast(planes), "d")
-        .groupBy("vec_id", "p")
-        .agg(F.when(F.sum(F.col("q") * F.col("coeff")) >= 0, 1).otherwise(0).alias("bit"))
-        .groupBy("vec_id", F.expr("p div 8").alias("band_idx"))
-        .agg(F.sum(F.expr("bit * shiftleft(1, p % 8)")).alias("band_key"))
-        .localCheckpoint(eager=True)
-    )
+    bands = _int_plane_bands(spark, e, 16).localCheckpoint(eager=True)
     qb = bands.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "band_idx", "band_key"
     )
@@ -3198,9 +3191,6 @@ def q_sim_ann_lsh_checkable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), "band_idx", "band_key"
     )
     cand = qb.join(cb, ["band_idx", "band_key"]).select("query_id", "neighbor_id").distinct()
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     x = e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("ea"))
     y = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("eb"))
     cos = dot(F.col("ea"), F.col("eb")) / (
@@ -3343,6 +3333,37 @@ def q_sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cosine_scan(
+    e: DataFrame, n_queries: int, labels: tuple[str, str] = ("ql", "cl")
+) -> tuple[DataFrame, Column]:
+    """The eval family's broadcast-queries × corpus exact-cosine scan:
+    queries are vec_id < n_queries (qid, ea, label as labels[0]), the
+    corpus is the rest (cid, eb, label as labels[1]). Returns the lazy
+    corpus × broadcast-queries frame and its cosine column. The fold
+    multiplies the raw array<float> elements (similarity.cosine_topk
+    casts to double first), which is what the oracles' list_dot_product
+    matches."""
+    ql, cl = labels
+    # norms hoisted to per-ROW columns (the inline form re-derived both
+    # per PAIR — 3× the interpreted HOF work; same left-fold float
+    # sequence, so cos is bit-identical), and the corpus side widened so
+    # the broadcast pair sweep does not fuse into the single-split scan
+    # (guide §2/§4).
+    q = e.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
+        F.col("label").alias(ql),
+    ).withColumn("__na", F.sqrt(dot(F.col("ea"), F.col("ea"))))
+    c = widen(
+        e.filter(F.col("vec_id") >= n_queries).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("eb"),
+            F.col("label").alias(cl),
+        ),
+        "cid",
+    ).withColumn("__nb", F.sqrt(dot(F.col("eb"), F.col("eb"))))
+    cos = dot(F.col("ea"), F.col("eb")) / (F.col("__na") * F.col("__nb"))
+    return c.join(F.broadcast(q)), cos
+
+
 @query(
     "q_eval_knn_confusion",
     oracle="""
@@ -3379,32 +3400,10 @@ def q_eval_knn_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact. Output is O(labels²), independent of corpus size."""
     from pyspark.sql.window import Window as W
 
-    from etl4s_spark.operators.parallelism import widen
-
     e = load_table(spark, sf_dir, "embeddings")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    # norms hoisted to per-ROW columns (the inline form re-derived both
-    # per PAIR — 3× the interpreted HOF work; same left-fold float
-    # sequence, so cos is bit-identical), and the corpus side widened so
-    # the broadcast pair sweep does not fuse into the single-split scan
-    # (guide §2/§4).
-    q = e.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("label").alias("true_label"),
-    ).withColumn("__na", F.sqrt(dot(F.col("ea"), F.col("ea"))))
-    c = widen(
-        e.filter(F.col("vec_id") >= 50).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("eb"),
-            F.col("label").alias("pred_label"),
-        ),
-        "cid",
-    ).withColumn("__nb", F.sqrt(dot(F.col("eb"), F.col("eb"))))
-    cos = dot(F.col("ea"), F.col("eb")) / (F.col("__na") * F.col("__nb"))
+    pairs, cos = _cosine_scan(e, 50, ("true_label", "pred_label"))
     best = (
-        c.join(F.broadcast(q))
-        .withColumn("cos", cos)
+        pairs.withColumn("cos", cos)
         .withColumn(
             "rn", F.row_number().over(W.partitionBy("qid").orderBy(F.desc("cos"), "cid"))
         )
@@ -3470,27 +3469,9 @@ def q_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     e = load_table(spark, sf_dir, "embeddings")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    # norms hoisted per ROW + corpus side widened (guide §2/§4: the
-    # broadcast pair sweep otherwise fuses into the single-split scan
-    # and re-derives both norms per pair; bit-identical cos)
-    q = e.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("label").alias("ql"),
-    ).withColumn("__na", F.sqrt(dot(F.col("ea"), F.col("ea"))))
-    c = widen(
-        e.filter(F.col("vec_id") >= 20).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("eb"),
-            F.col("label").alias("cl"),
-        ),
-        "cid",
-    ).withColumn("__nb", F.sqrt(dot(F.col("eb"), F.col("eb"))))
-    cos = dot(F.col("ea"), F.col("eb")) / (F.col("__na") * F.col("__nb"))
+    pairs, cos = _cosine_scan(e, 20)
     ranked = (
-        c.join(F.broadcast(q))
-        .withColumn("rel", (F.col("ql") == F.col("cl")).cast("int"))
+        pairs.withColumn("rel", (F.col("ql") == F.col("cl")).cast("int"))
         .withColumn(
             "rn", F.row_number().over(W.partitionBy("qid").orderBy(F.desc(cos), "cid"))
         )
@@ -3627,26 +3608,9 @@ def q_eval_precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     e = load_table(spark, sf_dir, "embeddings")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    # norms hoisted per ROW + corpus side widened (guide §2/§4;
-    # bit-identical cos — see q_eval_ndcg)
-    q = e.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("label").alias("ql"),
-    ).withColumn("__na", F.sqrt(dot(F.col("ea"), F.col("ea"))))
-    c = widen(
-        e.filter(F.col("vec_id") >= 20).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("eb"),
-            F.col("label").alias("cl"),
-        ),
-        "cid",
-    ).withColumn("__nb", F.sqrt(dot(F.col("eb"), F.col("eb"))))
-    cos = dot(F.col("ea"), F.col("eb")) / (F.col("__na") * F.col("__nb"))
+    pairs, cos = _cosine_scan(e, 20)
     perq = (
-        c.join(F.broadcast(q))
-        .withColumn("rel", (F.col("ql") == F.col("cl")).cast("int"))
+        pairs.withColumn("rel", (F.col("ql") == F.col("cl")).cast("int"))
         .withColumn(
             "rn", F.row_number().over(W.partitionBy("qid").orderBy(F.desc(cos), "cid"))
         )
@@ -3731,28 +3695,11 @@ def q_pipeline_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl4s_spark.core.node import node
 
     e = load_table(spark, sf_dir, "embeddings")
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    # norms hoisted per ROW + corpus side widened (guide §2/§4;
-    # bit-identical cos — see q_eval_ndcg)
-    q = e.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("ea"),
-        F.col("label").alias("ql"),
-    ).withColumn("__na", F.sqrt(dot(F.col("ea"), F.col("ea"))))
-    c = widen(
-        e.filter(F.col("vec_id") >= 20).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("eb"),
-            F.col("label").alias("cl"),
-        ),
-        "cid",
-    ).withColumn("__nb", F.sqrt(dot(F.col("eb"), F.col("eb"))))
-    cos = dot(F.col("ea"), F.col("eb")) / (F.col("__na") * F.col("__nb"))
+    pairs, cos = _cosine_scan(e, 20)
 
     def build_ranked(_: DataFrame) -> DataFrame:
         return (
-            c.join(F.broadcast(q))
-            .withColumn("rel", (F.col("ql") == F.col("cl")).cast("int"))
+            pairs.withColumn("rel", (F.col("ql") == F.col("cl")).cast("int"))
             .withColumn(
                 "rn",
                 F.row_number().over(W.partitionBy("qid").orderBy(F.desc(cos), "cid")),
@@ -4028,30 +3975,14 @@ def q_audit_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-checked by the driver. At 64 perms / 16 bands the S-curve
     puts P(propose | J=0.5) ≈ 1−(1−0.5⁴)^16 ≈ 0.65 per theory; real
     near-dup corpora sit far above J=0.5 where recall → 1."""
-    from etl4s_spark.operators.parallelism import widen
-    from etl4s_spark.operators.text import normalize_text
-
-    d = load_table(spark, sf_dir, "documents")
-    w = F.split(normalize_text(F.col("text")), " ")
-    shingles = F.when(
-        F.size(w) >= 3,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - 3),
-                lambda i: F.array_join(F.slice(w, i + 1, 3), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     # the shingle explosion feeds FOUR consumers (sizes, both sides of
     # the self-join, and the banding candidates) — materialize once.
     # DISK_ONLY: the explosion is docs×shingles-sized, and deserialized
     # MEMORY_AND_DISK block *construction* needs each partition resident
     # in heap — at 100x corpus (~750M rows) 32 concurrent tasks OOM'd the
     # local JVM; serialized disk blocks stream, keeping memory bounded
-    sh = (
-        widen(d.select("doc_id", "text"), "doc_id")
-        .select("doc_id", F.explode(shingles).alias("s"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    sh = _checkable_shingles(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
@@ -4154,45 +4085,12 @@ def q_audit_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     500-vector slice the dedup family uses (the uncapped truth side is
     the quadratic exact-pair op — 23 s at sf0.1 before the cap); the
     propose side is the broadcast integer dot-product plan."""
-    from pyspark.sql.window import Window as W  # noqa: F401
-
-    from etl4s_spark.operators.similarity import embedding_neardup_pairs
-
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
     truth = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.4).select(
         "id_a", "id_b"
     )
-    planes = spark.range(32 * 64).selectExpr(
-        "CAST(id div 64 AS INT) AS p",
-        "CAST(id % 64 AS INT) AS d",
-        "CAST(conv(substring(md5(concat('pl:', CAST(id div 64 AS STRING), ':', "
-        "CAST(id % 64 AS STRING))), 1, 8), 16, 10) AS BIGINT) - 2147483648 AS coeff",
-    )
-    # widen before the ×64 posexplode × plane fan-out: fused into the
-    # single-split scan the integer-dot expansion runs on one core
-    # (guide §2; no-op on wide scans)
-    el = widen(e.select("vec_id", "embedding"), "vec_id").select(
-        "vec_id", F.posexplode("embedding").alias("d", "v")
-    ).select(
-        "vec_id", "d", F.round(F.col("v").cast("double") * 1000).cast("long").alias("q")
-    )
-    bands = (
-        el.join(F.broadcast(planes), "d")
-        .groupBy("vec_id", "p")
-        .agg(F.when(F.sum(F.col("q") * F.col("coeff")) >= 0, 1).otherwise(0).alias("bit"))
-        .groupBy("vec_id", F.expr("p div 8").alias("band_idx"))
-        .agg(F.sum(F.expr("bit * shiftleft(1, p % 8)")).alias("band_key"))
-        .localCheckpoint(eager=True)
-    )
-    proposed = (
-        bands.join(
-            bands.select(F.col("vec_id").alias("id_b"), "band_idx", "band_key"),
-            ["band_idx", "band_key"],
-        )
-        .filter(F.col("vec_id") < F.col("id_b"))
-        .select(F.col("vec_id").alias("id_a"), "id_b")
-        .distinct()
-    )
+    bands = _int_plane_bands(spark, e, 32).localCheckpoint(eager=True)
+    proposed = _band_pairs(bands)
     # ONE full-outer join + aggregate instead of two pair checkpoints +
     # three count() actions (r13; same move as q_audit_lsh_recall) —
     # each side is consumed exactly once, the final-row Python
@@ -4382,28 +4280,12 @@ def q_dedup_funnel_checkable(spark: SparkSession, sf_dir: str) -> DataFrame:
     Twins q_dedup_funnel (xxhash64, rows-only) the way the sketch twins
     do their stages; the verify join touches only PROPOSED pairs'
     shingles, never all pairs."""
-    from etl4s_spark.operators.parallelism import widen
-    from etl4s_spark.operators.text import normalize_text
-
-    d = load_table(spark, sf_dir, "documents")
-    w = F.split(normalize_text(F.col("text")), " ")
-    shingles = F.when(
-        F.size(w) >= 3,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - 3),
-                lambda i: F.array_join(F.slice(w, i + 1, 3), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     # sh feeds sizes + both verify joins — materialize the explosion
     # once. DISK_ONLY for the same reason as q_audit_lsh_recall: the
     # docs×shingles explosion OOMs deserialized in-heap block builds at
     # 100x; serialized disk blocks keep the materialization bounded
-    sh = (
-        widen(d.select("doc_id", "text"), "doc_id")
-        .select("doc_id", F.explode(shingles).alias("s"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    sh = _checkable_shingles(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
     # banding candidates from the SAME checkpointed shingle relation —
     # no second corpus scan / shingle pass (r13; same move as
@@ -4740,50 +4622,14 @@ def q_audit_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the propose side is the same integer-exact band plan. All counts
     exact integers; the threshold comparisons run on identical
     doubles (the 0.4-family determinism class)."""
-    from etl4s_spark.operators.similarity import embedding_neardup_pairs
-
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
     scored = (
         embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.3)
         .select("id_a", "id_b", "cos_sim")
         .localCheckpoint(eager=True)
     )
-    planes = spark.range(32 * 64).selectExpr(
-        "CAST(id div 64 AS INT) AS p",
-        "CAST(id % 64 AS INT) AS d",
-        "CAST(conv(substring(md5(concat('pl:', CAST(id div 64 AS STRING), ':', "
-        "CAST(id % 64 AS STRING))), 1, 8), 16, 10) AS BIGINT) - 2147483648 AS coeff",
-    )
-    # widen before the ×64 posexplode × plane fan-out (guide §2)
-    el = widen(e.select("vec_id", "embedding"), "vec_id").select(
-        "vec_id", F.posexplode("embedding").alias("d", "v")
-    ).select(
-        "vec_id",
-        "d",
-        F.round(F.col("v").cast("double") * 1000).cast("long").alias("q"),
-    )
-    bands = (
-        el.join(F.broadcast(planes), "d")
-        .groupBy("vec_id", "p")
-        .agg(
-            F.when(F.sum(F.col("q") * F.col("coeff")) >= 0, 1)
-            .otherwise(0)
-            .alias("bit")
-        )
-        .groupBy("vec_id", F.expr("p div 8").alias("band_idx"))
-        .agg(F.sum(F.expr("bit * shiftleft(1, p % 8)")).alias("band_key"))
-        .localCheckpoint(eager=True)
-    )
-    proposed = (
-        bands.join(
-            bands.select(F.col("vec_id").alias("id_b"), "band_idx", "band_key"),
-            ["band_idx", "band_key"],
-        )
-        .filter(F.col("vec_id") < F.col("id_b"))
-        .select(F.col("vec_id").alias("id_a"), "id_b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    bands = _int_plane_bands(spark, e, 32).localCheckpoint(eager=True)
+    proposed = _band_pairs(bands).localCheckpoint(eager=True)
     # n_prop rides along as a broadcast one-row join instead of a
     # separate driver count() action (r13): identical double value
     np = proposed.agg(F.count(F.lit(1)).cast("double").alias("__np"))
@@ -4888,15 +4734,7 @@ def q_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").cast("array<double>").alias("cvec"),
         )
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            F.col("cvec"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2 = sq_l2(F.col("embedding").cast("array<double>"), F.col("cvec"))
     dists = e.join(F.broadcast(cent)).select(
         F.col("vec_id").alias("doc_id"),
         "centroid_id",

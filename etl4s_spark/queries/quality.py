@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl4s_spark.functions.exact import d38
+from etl4s_spark.operators.similarity import sq_l2
 from etl4s_spark.queries import query
 from etl4s_spark.sources.tables import load_table
 
@@ -653,15 +654,7 @@ def q_cluster_update_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").cast("array<double>").alias("cvec"),
         )
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            F.col("cvec"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    d2 = sq_l2(F.col("embedding").cast("array<double>"), F.col("cvec"))
     dists = e.join(F.broadcast(cent)).select(
         "vec_id",
         "centroid_id",

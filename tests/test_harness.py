@@ -1,5 +1,5 @@
 """``tools/harness.run_query``: the per-run record bench.py and the tools
-share. Its job counts come from the status tracker by job group, so they
+share. Its job counts come from the status tracker by job tag, so they
 are exact: a warm run of the same query on the same data repeats them."""
 
 from __future__ import annotations
@@ -25,6 +25,15 @@ def test_eager_checkpoints_count_as_build_jobs(spark, sf_dir):
     for key in ("build_jobs", "build_stages", "build_tasks", "exec_jobs", "exec_tasks"):
         assert a[key] == b[key], key
     assert a["exec_s"] > 0 and a["rows"] is None
+
+
+def test_stream_replay_counts_its_micro_batch_jobs(spark, sf_dir):
+    """q_stream_dedup_replay stages two files and drains them as one
+    micro-batch each on the stream's own thread; those jobs carry the
+    build tag (the thread inherits it), on top of the slice's toArrow job
+    on the caller's thread. The cold run may add the table's first read."""
+    _, warm = _runs(spark, sf_dir, "q_stream_dedup_replay", 2)
+    assert warm["build_jobs"] >= 1 + 2
 
 
 def test_lazy_query_runs_no_build_job_when_warm(spark, sf_dir):
@@ -61,3 +70,4 @@ def test_failing_query_is_recorded_not_raised(spark, sf_dir, monkeypatch, phase)
     assert (rec["build_s"] is None) == (phase == "build")
     assert rec["exec_s"] is None
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    assert set(spark.sparkContext.getJobTags()) == set()

@@ -1471,3 +1471,36 @@ def test_temperature_sampling_upweights_tail(spark):
     a = temperature_budget_sample(df, "id", "text", "source", 4000, alpha=0.5)
     b = temperature_budget_sample(df, "id", "text", "source", 4000, alpha=0.5)
     assert sorted(r.id for r in a.collect()) == sorted(r.id for r in b.collect())
+
+
+# The queries built on the shared checkable-sketch and exact-cosine
+# helpers (llm.py _checkable_shingles, _int_plane_bands, _band_pairs,
+# _cosine_scan), on similarity.sq_l2 and on graph.bfs_hops, each against
+# its own oracle.
+_SHARED_HELPER_QUERIES = [
+    "q_dedup_minhash_checkable",
+    "q_audit_lsh_recall",
+    "q_dedup_funnel_checkable",
+    "q_dedup_embedding_lsh_checkable",
+    "q_sim_ann_lsh_checkable",
+    "q_audit_ann_recall",
+    "q_audit_lsh_threshold_sweep",
+    "q_eval_knn_confusion",
+    "q_eval_ndcg",
+    "q_eval_precision_recall_at_k",
+    "q_pipeline_eval_report",
+    "q_cluster_assign",
+    "q_cluster_update_step",
+    "q_cluster_labels",
+    "q_graph_shortest_hops",
+]
+
+
+@pytest.mark.parametrize("name", _SHARED_HELPER_QUERIES)
+def test_shared_helper_query_matches_oracle(spark, sf_dir, duck, name):
+    from conftest import compare_to_oracle
+
+    from etl4s_spark.queries import ORACLES, QUERIES, load_all
+
+    load_all()
+    compare_to_oracle(QUERIES[name](spark, sf_dir), duck, ORACLES[name])

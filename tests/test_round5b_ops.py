@@ -547,7 +547,10 @@ def test_kcore_query_sentinel_nonvacuous(spark, sf_dir):
     result at every SF: its 4 nodes must appear with core_degree exactly
     3, and the organic portion (ids < 10^9) must equal k_core of the
     organic pair graph alone — the sentinel cannot perturb real nodes
-    because its ids are disjoint from every vec_id."""
+    because its ids are disjoint from every vec_id. The whole result must
+    also equal an independent pure-Python peel of the same edges plus the
+    sentinel clique, so the query is not checked only against the
+    operator it calls."""
     from etl4s_spark.operators.graph import k_core
     from etl4s_spark.queries import QUERIES, load_all
     from etl4s_spark.queries.analytics import _neardup_pairs
@@ -557,11 +560,20 @@ def test_kcore_query_sentinel_nonvacuous(spark, sf_dir):
     base = 1_000_000_000
     assert {got.get(base + i) for i in range(4)} == {3}
     organic_got = {n: d for n, d in got.items() if n < base}
-    organic_want = {
-        r.id: r.core_degree
-        for r in k_core(_neardup_pairs(spark, sf_dir), k=3).collect()
-    }
+    pairs = _neardup_pairs(spark, sf_dir)
+    organic_want = {r.id: r.core_degree for r in k_core(pairs, k=3).collect()}
     assert organic_got == organic_want
+
+    edges = [(r.id_a, r.id_b) for r in pairs.collect()]
+    edges += [(base + i, base + j) for i in range(4) for j in range(i + 1, 4)]
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    alive = set(adj)
+    while drop := {n for n in alive if len(adj[n] & alive) < 3}:
+        alive -= drop
+    assert got == {n: len(adj[n] & alive) for n in alive}
 
 
 def test_kanonymity_counts_small_classes(spark, tmp_path):

@@ -6,6 +6,7 @@ oracles cover them on the big tables; these pin the algebra."""
 from __future__ import annotations
 
 import random
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -24,8 +25,19 @@ def test_bfs_hops_chain_and_isolated_seed(spark):
     # (7 touches no edge at all — still reported at hops 0)
     edges = _pairs(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (8, 9)])
     seeds = spark.createDataFrame([(1,), (7,)], "id long")
-    got = {r.id: r.hops for r in bfs_hops(edges, seeds, max_hops=6).collect()}
+    sc = spark.sparkContext
+    tag = f"bfs_chain_{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        dist = bfs_hops(edges, seeds, max_hops=6)
+    finally:
+        sc.removeJobTag(tag)
+    got = {r.id: r.hops for r in dist.collect()}
     assert got == {1: 0, 7: 0, 2: 1, 3: 2, 4: 3, 5: 4}
+    # the eager checkpoints are the only actions: edges, seeds, then the
+    # level and the grown dist per level, and the drained fifth level
+    # (41 jobs with AQE's per-stage jobs); a count() per level adds 10
+    assert len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag)) <= 41
 
 
 def test_bfs_hops_respects_hop_budget_and_min_distance(spark):

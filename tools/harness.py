@@ -1,7 +1,7 @@
 """One query run, recorded: the loop bench.py and the query-running tools share.
 
 ``run_query(spark, name, sf_dir, action)`` builds one registered query
-under the job group ``<tag>:build`` and times that as ``build_s``, then
+under the job tag ``<tag>:build`` and times that as ``build_s``, then
 runs one action on the DataFrame under ``<tag>:exec`` and times that as
 ``exec_s``. The actions:
 
@@ -14,11 +14,13 @@ runs one action on the DataFrame under ``<tag>:exec`` and times that as
   planned but not executed; plan_audit.
 
 The record it returns holds ``build_s``, ``exec_s``, the Spark jobs,
-stages and tasks each phase ran (from the status tracker, by job
-group), ``cpu_s`` (user + system CPU of this process and every process
-below it), ``jit_cpu_s`` (the part spent on the driver JVM's live
-C1/C2 compiler threads) and ``pyworker_cpu_s`` (the part spent in the
-processes below the JVM: Python workers and the helpers it forks;
+stages and tasks each phase ran (from the status tracker, by job tag; a
+stream's micro-batch thread inherits the tags, so a replay's
+micro-batch jobs count as build jobs), ``cpu_s`` (user + system CPU of
+this process and every process below it), ``jit_cpu_s`` (the part spent
+on the driver JVM's live C1/C2 compiler threads) and ``pyworker_cpu_s``
+(the part spent in the processes below the JVM: Python workers and the
+helpers it forks;
 Spark's executor CPU metric counts JVM task threads only, so work moved
 into a Python worker shows here and not there), plus ``rows`` (when the
 action yields a row count) and ``error``. An exception is caught into
@@ -26,8 +28,6 @@ action yields a row count) and ``error``. An exception is caught into
 timed windows. Where the action yields an object (the pandas frame, the
 plan text), it is under ``result``; callers pop it before serialising.
 
-Stream micro-batch jobs run on the stream's own thread and do not carry
-the caller's job group, so a replay's build jobs are undercounted.
 Event-log counters (executor CPU, shuffle, spill) and Catalyst phase
 times are in perfbench's traced run (``perfbench/run.py --trace 1``).
 """
@@ -110,11 +110,11 @@ def _plan(df):
 ACTIONS = {"noop": _noop, "pandas": _pandas, "collect": _collect, "plan": _plan}
 
 
-def _job_counts(sc, group: str) -> tuple[int, int, int]:
-    """Jobs, run stages and completed tasks of one job group. A stage
+def _job_counts(sc, tag: str) -> tuple[int, int, int]:
+    """Jobs, run stages and completed tasks of one job tag. A stage
     whose output an earlier job already wrote is skipped, not run."""
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    jobs = list(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
     stages = tasks = 0
     for job in jobs:
         info = tracker.getJobInfo(job)
@@ -138,11 +138,12 @@ def run_query(spark, name: str, sf_dir: str, action: str = "noop") -> dict:
     rec: dict = {"query": name, "build_s": None, "exec_s": None, "rows": None, "error": None}
     c0, j0, w0 = tree_cpu_s(os.getpid()), jit_thread_ticks(jvm_pid), pyworker_cpu_s(jvm_pid)
     try:
-        sc.setJobGroup(f"{tag}:build", name)
+        sc.addJobTag(f"{tag}:build")
         t = time.perf_counter()
         df = QUERIES[name](spark, sf_dir)
         rec["build_s"] = round(time.perf_counter() - t, 4)
-        sc.setJobGroup(f"{tag}:exec", name)
+        sc.removeJobTag(f"{tag}:build")
+        sc.addJobTag(f"{tag}:exec")
         t = time.perf_counter()
         rec["rows"], result = ACTIONS[action](df)
         rec["exec_s"] = round(time.perf_counter() - t, 4)
@@ -151,7 +152,8 @@ def run_query(spark, name: str, sf_dir: str, action: str = "noop") -> dict:
     except Exception as e:  # noqa: BLE001 — recorded; the sweep goes on
         rec["error"] = f"{type(e).__name__}: {e}"[:500]
     finally:
-        sc.setJobGroup(None, None)
+        for phase in ("build", "exec"):
+            sc.removeJobTag(f"{tag}:{phase}")
     w1, j1, c1 = pyworker_cpu_s(jvm_pid), jit_thread_ticks(jvm_pid), tree_cpu_s(os.getpid())
     rec["cpu_s"] = round(c1 - c0, 2)
     rec["jit_cpu_s"] = round(jit_cpu_s(j0, j1), 2)
