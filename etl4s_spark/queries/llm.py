@@ -3340,9 +3340,8 @@ def _cosine_scan(
     queries are vec_id < n_queries (qid, ea, label as labels[0]), the
     corpus is the rest (cid, eb, label as labels[1]). Returns the lazy
     corpus × broadcast-queries frame and its cosine column. The fold
-    multiplies the raw array<float> elements (similarity.cosine_topk
-    casts to double first), which is what the oracles' list_dot_product
-    matches."""
+    multiplies the raw array<float> elements, the form the oracles were
+    proven on; similarity.cosine_topk casts to double first."""
     ql, cl = labels
     # norms hoisted to per-ROW columns (the inline form re-derived both
     # per PAIR — 3× the interpreted HOF work; same left-fold float
