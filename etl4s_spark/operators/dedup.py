@@ -428,16 +428,6 @@ def dedup_funnel(
 _MAX_CC_ROUNDS = 100
 
 
-def _persist(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Eager lineage cut: a RELIABLE checkpoint into ``checkpoint_dir``
-    (HDFS/object store — survives executor loss) when one is given,
-    otherwise ``localCheckpoint``."""
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=True)
-    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=True)
-
-
 def _point_at(nodes: Column, target: Column) -> Column:
     """One (src = node, dst = target) row per element of ``nodes``."""
     return F.explode(
@@ -499,7 +489,6 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph — the stage
     that turns PAIRS into CLUSTERS so one canonical doc per cluster can
@@ -525,23 +514,20 @@ def connected_components(
     later rounds only ever see the contracted edge set.
 
     Cost: one round = two map-side-combined aggregations (one shuffle
-    each) and ONE eager checkpoint. The round's convergence count rides
-    on ``DataFrame.observe`` of the large-star aggregation, so no round
-    runs a separate count/first action (only its zero-ness is read, so
-    a reliable checkpoint re-evaluating the plan cannot mislead it), and
-    because it tests the large-star's input, the round that sees zero is
-    the last one. The
-    lazy ``pairs`` plan is read once, by round 0, in a single leg. With
-    ``checkpoint_dir`` each round is a reliable checkpoint, otherwise a
-    local one. The converged state holds exactly one (node, root) row
-    per node, so the result is that checkpoint, renamed — no further
+    each) and ONE eager ``localCheckpoint``. The round's convergence
+    count rides on ``DataFrame.observe`` of the large-star aggregation,
+    so no round runs a separate count/first action, and because it
+    tests the large-star's input, the round that sees zero is the last
+    one. The lazy ``pairs`` plan is read once, by round 0, in a single
+    leg. The converged state holds exactly one (node, root) row per
+    node, so the result is that checkpoint, renamed — no further
     shuffle."""
     edges = pairs.where(F.col(id_a).isNotNull() & F.col(id_b).isNotNull()).select(
         F.greatest(id_a, id_b).alias("src"), F.least(id_a, id_b).alias("dst")
     )
     for _ in range(_MAX_CC_ROUNDS):
         unsettled = Observation()
-        edges = _persist(_large_star(_small_star(edges), unsettled), checkpoint_dir)
+        edges = _large_star(_small_star(edges), unsettled).localCheckpoint(eager=True)
         if unsettled.get["n"] == 0:
             return edges.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     raise RuntimeError(

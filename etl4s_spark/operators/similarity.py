@@ -57,6 +57,27 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _cosine_topk_tail(pairs: DataFrame, k: int, score: str = "cos_sim") -> DataFrame:
+    """Score (query_id, neighbor_id) candidate pairs that carry both
+    vectors and their per-row norms (``__qv``/``__qn``, ``__cv``/``__cn``)
+    as the 6-dp rounded cosine ``score``, and keep each query's top k by
+    (score desc, neighbor_id) — the row_number filter compiles to
+    WindowGroupLimit."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(
+            dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")), 6
+        ).alias(score),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", score, "rn")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -89,24 +110,8 @@ def cosine_topk(
         ),
         "neighbor_id",
     ).withColumn("__cn", l2_norm(F.col("__cv")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    pairs = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
+    return _cosine_topk_tail(pairs, k)
 
 
 def centroid_matrix_frame(spark, centroids: list[list[float]]) -> DataFrame:
@@ -266,24 +271,8 @@ def ivf_topk(
         )
         .withColumn("__qn", l2_norm(F.col("__qv")))
     )
-    scored = (
-        c.join(q, "__cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    pairs = c.join(q, "__cell").filter(F.col("neighbor_id") != F.col("query_id"))
+    return _cosine_topk_tail(pairs, k)
 
 
 # embedding_neardup_pairs kernel sizing, derived from the row count the
@@ -838,24 +827,7 @@ def lsh_bucketed_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("__cv")
     ).withColumn("__cn", l2_norm(F.col("__cv")))
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rn")
-    )
+    return _cosine_topk_tail(cand.join(q, "query_id").join(c, "neighbor_id"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1069,11 +1041,7 @@ def pq_encode(
     interpreted-HOF argmin at 2k rows × 16 subspaces × 64 codes)."""
     sub = len(codebooks[0][0])
     el = _pq_elements(df, id_col, vec_col, sub)
-    return _pq_encode_elements(el, df.sparkSession, codebooks)
-
-
-def _pq_encode_elements(el: DataFrame, spark, codebooks) -> DataFrame:
-    assigned = _pq_assign_codes(el, spark, codebooks)
+    assigned = _pq_assign_codes(el, df.sparkSession, codebooks)
     return (
         assigned.groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("m", "code"))).alias("mc"))
@@ -1122,8 +1090,9 @@ def pq_topk(
     posture, where the quantizer is a training artifact and the query
     path only encodes + scans (at 100 TB you also persist the encoded
     codes; here the encode is a zero-shuffle projection of the scan).
-    When ``codebooks`` is None the quantizer is trained inline
-    (m_subspaces/n_codes/seed/sweeps) — the self-contained demo path.
+    When ``codebooks`` is None the quantizer is trained first by
+    ``pq_train`` (m_subspaces/n_codes/seed/sweeps), then served the same
+    way — the self-contained demo path.
 
     Pass ``coded`` (a ``pq_encode`` result for this corpus+codebooks,
     typically persisted/checkpointed by the caller) to skip the encode
@@ -1133,48 +1102,19 @@ def pq_topk(
     query_id_col = query_id_col or id_col
     if coded is not None and codebooks is None:
         raise ValueError("coded requires codebooks (the LUT is built from them)")
-    if codebooks is not None:
-        m_subspaces, n_codes = len(codebooks), len(codebooks[0])
+    if codebooks is None:
+        codebooks = pq_train(corpus, id_col, vec_col, dim, m_subspaces, n_codes, seed, sweeps)
+    m_subspaces, n_codes = len(codebooks), len(codebooks[0])
     sub = dim // m_subspaces
     if sub * m_subspaces != dim:
         raise ValueError(f"dim {dim} not divisible by m_subspaces {m_subspaces}")
-    spark = corpus.sparkSession
-    if codebooks is not None:
-        books = codebooks
-        cb = pq_codebook_frame(spark, books)
-        if coded is not None:
-            coded = coded.withColumnRenamed("id", "neighbor_id")
-        else:
-            # serve path: elements feed exactly one consumer (the encode),
-            # so no persist/checkpoint barrier — the codes projection
-            # pipelines straight out of the corpus scan
-            coded = pq_encode(corpus, id_col, vec_col, books).withColumnRenamed(
-                "id", "neighbor_id"
-            )
-    else:
-        # ONE persisted exploded-elements frame feeds both the Lloyd
-        # sweeps and the final encode — elements don't depend on the
-        # codebooks, so recomputing the scan+explode per stage is pure
-        # waste (at scale the persist is a re-read guard; locally it
-        # halved the query).
-        el = _pq_elements(corpus, id_col, vec_col, sub).persist()
-        try:
-            books = _pq_seed_books(
-                corpus, id_col, vec_col, dim, m_subspaces, n_codes, seed
-            )
-            if sweeps:
-                books = _pq_refine(el, spark, books, sweeps)
-            cb = pq_codebook_frame(spark, books)
-            coded = (
-                _pq_encode_elements(el, spark, books)
-                .withColumnRenamed("id", "neighbor_id")
-                # materialize the M-byte codes OFF the persisted elements
-                # before el is unpersisted below: localCheckpoint cuts the
-                # lineage so downstream topk stages scan codes, not vectors
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            el.unpersist()
+    cb = pq_codebook_frame(corpus.sparkSession, codebooks)
+    if coded is None:
+        # elements feed exactly one consumer (the encode), so no
+        # persist/checkpoint barrier — the codes projection pipelines
+        # straight out of the corpus scan
+        coded = pq_encode(corpus, id_col, vec_col, codebooks)
+    coded = coded.withColumnRenamed("id", "neighbor_id")
     q = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -1238,26 +1178,8 @@ def pq_topk(
     qvecs = queries.select(
         F.col(query_id_col).alias("query_id"), as_double(F.col(vec_col)).alias("__qv")
     ).withColumn("__qn", l2_norm(F.col("__qv")))
-    reranked = (
-        shortlist.join(vecs, "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-                6,
-            ).alias("approx_cos"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "approx_cos", "rn")
-    )
+    pairs = shortlist.join(vecs, "neighbor_id").join(F.broadcast(qvecs), "query_id")
+    return _cosine_topk_tail(pairs, k, "approx_cos")
 
 
 def semdedup(

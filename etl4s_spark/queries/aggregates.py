@@ -794,6 +794,34 @@ def q_agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def _weighted_cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantity-weighted price histogram per return flag with its
+    cumulative window: (g, p cents, cw = weight of prices ≤ p, tw =
+    the flag's total weight), exact BIGINTs."""
+    li = load_table(spark, sf_dir, "lineitem")
+    # no pre-aggregation widen: map-side combine collapses the fact rows
+    # to the (flag, cents) histogram before the exchange; repartitioning
+    # raw rows below the partial aggregate shuffles the whole fact table
+    # for nothing (guide §2.3; round-12 regression, reverted)
+    cw = (
+        li.select(
+            F.col("l_returnflag").alias("g"),
+            F.round(F.col("l_extendedprice") * 100).cast("long").alias("p"),
+            F.round("l_quantity").cast("long").alias("__q"),
+        )
+        .groupBy("g", "p")
+        .agg(F.sum("__q").alias("w"))
+    )
+    wo = Window.partitionBy("g").orderBy("p").rowsBetween(Window.unboundedPreceding, 0)
+    wg = Window.partitionBy("g")
+    return cw.select(
+        "g",
+        "p",
+        F.sum("w").over(wo).alias("cw"),
+        F.sum("w").over(wg).alias("tw"),
+    )
+
+
 @query(
     "q_agg_weighted_median",
     oracle="""
@@ -826,28 +854,7 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over the bounded price DOMAIN, never raw rows — and
     weights/cents are exact BIGINTs, so the defining inequality
     2·cumw ≥ total is integer arithmetic in both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # no pre-aggregation widen: map-side combine collapses the fact rows
-    # to the (flag, cents) histogram before the exchange; repartitioning
-    # raw rows below the partial aggregate shuffles the whole fact table
-    # for nothing (guide §2.3; round-12 regression, reverted)
-    cw = (
-        li.select(
-            F.col("l_returnflag").alias("g"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("p"),
-            F.round("l_quantity").cast("long").alias("__q"),
-        )
-        .groupBy("g", "p")
-        .agg(F.sum("__q").alias("w"))
-    )
-    wo = Window.partitionBy("g").orderBy("p").rowsBetween(Window.unboundedPreceding, 0)
-    wg = Window.partitionBy("g")
-    cum = cw.select(
-        "g",
-        "p",
-        F.sum("w").over(wo).alias("cw"),
-        F.sum("w").over(wg).alias("tw"),
-    )
+    cum = _weighted_cents_cum(spark, sf_dir)
     return (
         cum.groupBy("g")
         .agg(
@@ -1009,24 +1016,7 @@ def q_agg_weighted_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades at. Same counts-histogram plan as q_agg_weighted_median;
     each cut is one integer cross-multiplication (4·cumw ≥ q·total) —
     three FILTERed mins share the same cumulative pass."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # no pre-aggregation widen: see q_agg_weighted_median — map-side
-    # combine beats a raw-row repartition below the partial aggregate
-    # (guide §2.3; round-12 regression, reverted)
-    cw = (
-        li.select(
-            F.col("l_returnflag").alias("g"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("p"),
-            F.round("l_quantity").cast("long").alias("__q"),
-        )
-        .groupBy("g", "p")
-        .agg(F.sum("__q").alias("w"))
-    )
-    wo = Window.partitionBy("g").orderBy("p").rowsBetween(Window.unboundedPreceding, 0)
-    wg = Window.partitionBy("g")
-    cum = cw.select(
-        "g", "p", F.sum("w").over(wo).alias("cw"), F.sum("w").over(wg).alias("tw")
-    )
+    cum = _weighted_cents_cum(spark, sf_dir)
     def cut(mult_c: int, mult_t: int, name: str):
         return F.round(
             F.min(

@@ -41,29 +41,26 @@ _PAIRS_SQL = """
 """
 
 
-def _neardup_pairs(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl4s_spark.operators.similarity import embedding_neardup_pairs
 
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    # Materialized at the source by default: the all-pairs cosine is the
-    # expensive leaf under every graph query, and most consumers
-    # (triangle census e1/e2/e3, degree symmetrize, jaccard wedges,
-    # assortativity moments) reference the frame 2-5 times.
-    # embedding_neardup_pairs collects the vectors once, at this call,
-    # but its pair kernel is a lazy mapInArrow: each reference would rerun
-    # it in a Python worker. The materialized pair list itself is tiny
-    # (tens of rows per 500 docs). materialize=False is for consumers
-    # that read the pairs EXACTLY once before their own barrier — and
-    # "once" must count union legs: symmetrize() plans its two legs
-    # independently, so even symmetrize-then-checkpoint evaluates a lazy
-    # upstream twice (r12: pagerank and k_core moved back to the default
-    # for exactly this reason).
+    # Materialized at the source: the all-pairs cosine is the expensive
+    # leaf under every graph query, and most consumers (triangle census
+    # e1/e2/e3, degree symmetrize, jaccard wedges, assortativity moments)
+    # reference the frame 2-5 times. embedding_neardup_pairs collects the
+    # vectors once, at this call, but its pair kernel is a lazy
+    # mapInArrow: each reference would rerun it in a Python worker. The
+    # materialized pair list itself is tiny (tens of rows per 500 docs).
+    # Even a consumer that reads the pairs once needs it when "once"
+    # counts union legs: symmetrize() plans its two legs independently,
+    # so symmetrize-then-checkpoint evaluates a lazy upstream twice (r12:
+    # pagerank and k_core moved back to the materialized pairs for
+    # exactly this reason).
     pairs = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.4).select(
         "id_a", "id_b"
     )
-    return pairs.localCheckpoint(eager=True) if materialize else pairs
+    return pairs.localCheckpoint(eager=True)
 
 
 def _daily_grid(ev: DataFrame):
@@ -85,6 +82,27 @@ def _daily_grid(ev: DataFrame):
         F.round(F.avg("value"), 4).alias("avg_value"),
     )
     return grid, daily
+
+
+def _daily_series(ev: DataFrame, **aggs) -> DataFrame:
+    """Zero-filled daily event series: the whole span's exploded day
+    grid left-joined to the per-day aggregates, one column per keyword
+    (``x=F.count(...)`` → ``x``, 0 on a day without events)."""
+    span = ev.agg(
+        F.date_trunc("DAY", F.min("ts")).alias("d0"),
+        F.date_trunc("DAY", F.max("ts")).alias("d1"),
+    )
+    grid = span.select(
+        F.explode(
+            F.sequence(F.col("d0"), F.col("d1"), F.expr("interval 1 day"))
+        ).alias("day")
+    )
+    counts = ev.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
+        *(agg.alias(f"c{name}") for name, agg in aggs.items())
+    )
+    return grid.join(counts, "day", "left").select(
+        "day", *(F.coalesce(f"c{name}", F.lit(0)).alias(name) for name in aggs)
+    )
 
 
 @query(
@@ -1996,21 +2014,7 @@ def q_ts_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     averaged over a short frame. One shuffle for the daily aggregate;
     the window and rollup run on O(days) rows."""
     ev = load_table(spark, sf_dir, "events")
-    span = ev.agg(
-        F.date_trunc("DAY", F.min("ts")).alias("d0"),
-        F.date_trunc("DAY", F.max("ts")).alias("d1"),
-    )
-    grid = span.select(
-        F.explode(
-            F.sequence(F.col("d0"), F.col("d1"), F.expr("interval 1 day"))
-        ).alias("day")
-    )
-    counts = ev.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
-        F.count("event_id").alias("cx")
-    )
-    daily = grid.join(counts, "day", "left").select(
-        "day", F.coalesce("cx", F.lit(0)).alias("x")
-    )
+    daily = _daily_series(ev, x=F.count("event_id"))
     w7 = Window.partitionBy(one_part("day")).orderBy("day").rowsBetween(-3, 3)
     tr = daily.select(
         "day",

@@ -27,6 +27,7 @@ from etl4s_spark.functions.exact import d38
 from etl4s_spark.operators.ranking import one_part
 from etl4s_spark.operators.similarity import sq_l2
 from etl4s_spark.queries import query
+from etl4s_spark.queries.analytics import _daily_series
 from etl4s_spark.sources.tables import load_table
 
 
@@ -656,26 +657,10 @@ def q_ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation is the only big shuffle; the lag machinery runs on
     O(days) rows."""
     ev = load_table(spark, sf_dir, "events")
-    span = ev.agg(
-        F.date_trunc("DAY", F.min("ts")).alias("d0"),
-        F.date_trunc("DAY", F.max("ts")).alias("d1"),
-    )
-    grid = span.select(
-        F.explode(
-            F.sequence(F.col("d0"), F.col("d1"), F.expr("interval 1 day"))
-        ).alias("day")
-    )
-    counts = ev.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1)).alias("cx"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1)).alias("cy"),
-    )
-    daily = (
-        grid.join(counts, "day", "left")
-        .select(
-            "day",
-            F.coalesce("cx", F.lit(0)).alias("x"),
-            F.coalesce("cy", F.lit(0)).alias("y"),
-        )
+    daily = _daily_series(
+        ev,
+        x=F.sum(F.when(F.col("event_type") == "click", 1)),
+        y=F.sum(F.when(F.col("event_type") == "purchase", 1)),
     )
     lags = spark.range(-3, 4).select(F.col("id").cast("int").alias("lag"))
     a = daily.alias("a")
@@ -2041,21 +2026,7 @@ def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the fact table is aggregated once; at 100 TB backtesting longer
     horizons just adds lag columns to the same window sort."""
     ev = load_table(spark, sf_dir, "events")
-    span = ev.agg(
-        F.date_trunc("DAY", F.min("ts")).alias("d0"),
-        F.date_trunc("DAY", F.max("ts")).alias("d1"),
-    )
-    grid = span.select(
-        F.explode(
-            F.sequence(F.col("d0"), F.col("d1"), F.expr("interval 1 day"))
-        ).alias("day")
-    )
-    counts = ev.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
-        F.count("event_id").alias("cx")
-    )
-    daily = grid.join(counts, "day", "left").select(
-        "day", F.coalesce("cx", F.lit(0)).alias("x")
-    )
+    daily = _daily_series(ev, x=F.count("event_id"))
     w = Window.partitionBy(one_part("day")).orderBy("day")
     lagged = daily.select(
         "x",
@@ -2090,6 +2061,32 @@ def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("model")
     )
+
+
+def _part_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The common part basket of 1995 (base) and 2000 (current): one row
+    per part shipped in both years, with each year's cent sum (c0, c1)
+    and quantity sum (q0, q1) — one scan with the year filter pushed
+    down, one shuffle on (part, period)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    per = (
+        li.filter(F.year("l_shipdate").isin(1995, 2000))
+        .groupBy(
+            "l_partkey",
+            F.when(F.year("l_shipdate") == 1995, 0).otherwise(1).alias("period"),
+        )
+        .agg(
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("c"),
+            F.sum(F.round("l_quantity").cast("long")).alias("q"),
+        )
+    )
+    p0 = per.filter(F.col("period") == 0).select(
+        "l_partkey", F.col("c").alias("c0"), F.col("q").alias("q0")
+    )
+    p1 = per.filter(F.col("period") == 1).select(
+        "l_partkey", F.col("c").alias("c1"), F.col("q").alias("q1")
+    )
+    return p0.join(p1, "l_partkey")
 
 
 @query(
@@ -2140,25 +2137,7 @@ def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     all (they are plain cent sums). One scan with the year filter
     pushed down, one shuffle on (part, period), and the basket join
     runs on the part-level aggregate."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per = (
-        li.filter(F.year("l_shipdate").isin(1995, 2000))
-        .groupBy(
-            "l_partkey",
-            F.when(F.year("l_shipdate") == 1995, 0).otherwise(1).alias("period"),
-        )
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("c"),
-            F.sum(F.round("l_quantity").cast("long")).alias("q"),
-        )
-    )
-    p0 = per.filter(F.col("period") == 0).select(
-        "l_partkey", F.col("c").alias("c0"), F.col("q").alias("q0")
-    )
-    p1 = per.filter(F.col("period") == 1).select(
-        "l_partkey", F.col("c").alias("c1"), F.col("q").alias("q1")
-    )
-    basket = p0.join(p1, "l_partkey")
+    basket = _part_basket(spark, sf_dir)
     terms = basket.select(
         "c0",
         "c1",
@@ -2621,21 +2600,7 @@ def q_stat_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuity-corrected z does the single float division), and the
     1.96 verdict is computed from the identical z on both engines."""
     ev = load_table(spark, sf_dir, "events")
-    span = ev.agg(
-        F.date_trunc("DAY", F.min("ts")).alias("d0"),
-        F.date_trunc("DAY", F.max("ts")).alias("d1"),
-    )
-    grid = span.select(
-        F.explode(
-            F.sequence(F.col("d0"), F.col("d1"), F.expr("interval 1 day"))
-        ).alias("day")
-    )
-    counts = ev.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
-        F.count("event_id").alias("cx")
-    )
-    daily = grid.join(counts, "day", "left").select(
-        "day", F.coalesce("cx", F.lit(0)).alias("x")
-    )
+    daily = _daily_series(ev, x=F.count("event_id"))
     a, b = daily.alias("a"), daily.alias("b")
     s_stat = a.join(b, F.col("b.day") > F.col("a.day")).agg(
         F.sum(
@@ -2840,21 +2805,7 @@ def q_stat_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the bounded day domain — no consecutive-t self-join, no repeated
     subplans, no cache left behind in executor storage."""
     ev = load_table(spark, sf_dir, "events")
-    span = ev.agg(
-        F.date_trunc("DAY", F.min("ts")).alias("d0"),
-        F.date_trunc("DAY", F.max("ts")).alias("d1"),
-    )
-    grid = span.select(
-        F.explode(
-            F.sequence(F.col("d0"), F.col("d1"), F.expr("interval 1 day"))
-        ).alias("day")
-    )
-    counts = ev.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
-        F.count("event_id").alias("cy")
-    )
-    daily = grid.join(counts, "day", "left").select(
-        "day", F.coalesce("cy", F.lit(0)).alias("y")
-    )
+    daily = _daily_series(ev, y=F.count("event_id"))
     idx = daily.select(
         (F.row_number().over(Window.partitionBy(one_part("day")).orderBy("day")) - 1).alias("t"), "y"
     ).localCheckpoint(eager=True)  # one row per day; reused by moments + residuals
@@ -3501,25 +3452,7 @@ def q_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     defined as the EXACT remainder total − price − volume, making the
     bridge sum to ΔR by construction (pinned in pytest). One scan,
     one (part, period) shuffle, basket join on the part aggregate."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per = (
-        li.filter(F.year("l_shipdate").isin(1995, 2000))
-        .groupBy(
-            "l_partkey",
-            F.when(F.year("l_shipdate") == 1995, 0).otherwise(1).alias("period"),
-        )
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("c"),
-            F.sum(F.round("l_quantity").cast("long")).alias("q"),
-        )
-    )
-    p0 = per.filter(F.col("period") == 0).select(
-        "l_partkey", F.col("c").alias("c0"), F.col("q").alias("q0")
-    )
-    p1 = per.filter(F.col("period") == 1).select(
-        "l_partkey", F.col("c").alias("c1"), F.col("q").alias("q1")
-    )
-    basket = p0.join(p1, "l_partkey")
+    basket = _part_basket(spark, sf_dir)
     price_e3 = F.round(
         F.col("q0").cast("double") * F.col("c1") * 1000 / F.col("q1")
         - F.col("c0") * 1000.0

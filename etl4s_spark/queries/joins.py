@@ -309,6 +309,35 @@ def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _asof_purchase_click(
+    spark: SparkSession, sf_dir: str, purchase_ts: bool = False, **how
+) -> DataFrame:
+    """Each purchase as-of joined to the same user's clicks (``how`` is
+    asof_join's tolerance or direction), timestamps stringified on both
+    sides (tz/precision rule); ``purchase_ts`` keeps the purchase's own."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
+    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
+    joined = asof_join(
+        purchases,
+        clicks,
+        keys=["user_id"],
+        left_ts="ts",
+        right_ts="ts",
+        right_values=["value"],
+        **how,
+    )
+    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    own = [F.date_format("ts", fmt).alias("purchase_ts")] if purchase_ts else []
+    return joined.select(
+        "event_id",
+        "user_id",
+        *own,
+        F.date_format("matched_ts", fmt).alias("matched_ts"),
+        F.col("matched_value").alias("matched_value"),
+    ).orderBy("event_id")
+
+
 @query(
     "q_join_asof",
     oracle="""
@@ -326,20 +355,7 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase matched to the user's latest click
     at-or-before it — proven against DuckDB's native ASOF JOIN.
     Timestamps stringified on both sides (tz/precision rule)."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
-    joined = asof_join(
-        purchases, clicks, keys=["user_id"], left_ts="ts", right_ts="ts", right_values=["value"]
-    )
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", fmt).alias("purchase_ts"),
-        F.date_format("matched_ts", fmt).alias("matched_ts"),
-        F.col("matched_value").alias("matched_value"),
-    ).orderBy("event_id")
+    return _asof_purchase_click(spark, sf_dir, purchase_ts=True)
 
 
 @query(
@@ -359,25 +375,7 @@ def q_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join with a 1-hour tolerance: matches older than
     left_ts − 1h are nulled (stale quotes don't count). The oracle
     applies the same cutoff as CASE over DuckDB's native ASOF JOIN."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
-    joined = asof_join(
-        purchases,
-        clicks,
-        keys=["user_id"],
-        left_ts="ts",
-        right_ts="ts",
-        right_values=["value"],
-        tolerance=F.expr("INTERVAL 1 HOUR"),
-    )
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.date_format("matched_ts", fmt).alias("matched_ts"),
-        F.col("matched_value").alias("matched_value"),
-    ).orderBy("event_id")
+    return _asof_purchase_click(spark, sf_dir, tolerance=F.expr("INTERVAL 1 HOUR"))
 
 
 @query(
@@ -489,26 +487,7 @@ def q_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     do next"), proven against DuckDB's native ASOF JOIN with the
     inequality flipped. Same single-shuffle union+window plan as
     backward — only the sort direction differs."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
-    joined = asof_join(
-        purchases,
-        clicks,
-        keys=["user_id"],
-        left_ts="ts",
-        right_ts="ts",
-        right_values=["value"],
-        direction="forward",
-    )
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", fmt).alias("purchase_ts"),
-        F.date_format("matched_ts", fmt).alias("matched_ts"),
-        F.col("matched_value").alias("matched_value"),
-    ).orderBy("event_id")
+    return _asof_purchase_click(spark, sf_dir, purchase_ts=True, direction="forward")
 
 
 @query(
@@ -552,27 +531,7 @@ def q_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     directional fills over ONE hash exchange (two sorts, zero extra
     shuffles); the oracle composes DuckDB's two native ASOF directions
     with the same integer-microsecond tie rule."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts", "value")
-    joined = asof_join(
-        purchases,
-        clicks,
-        keys=["user_id"],
-        left_ts="ts",
-        right_ts="ts",
-        right_values=["value"],
-        direction="nearest",
-    )
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.date_format("matched_ts", fmt).alias("matched_ts"),
-        F.col("matched_value").alias("matched_value"),
-    ).orderBy("event_id")
+    return _asof_purchase_click(spark, sf_dir, direction="nearest")
 
 
 @query(

@@ -10,6 +10,7 @@ tests/test_llm_ops.py.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -652,13 +653,7 @@ def q_dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected_components, whose rounds ARE large-star/small-star: O(log
     n) rounds whatever the diameter, so the same routine serves dedup
     cliques and chains or link graphs alike."""
-    from etl4s_spark.operators.dedup import connected_components
-
-    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    pairs = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=0.4).select(
-        "id_a", "id_b"
-    )
-    return connected_components(pairs).orderBy("id")
+    return q_dedup_cluster_canonical(spark, sf_dir)
 
 
 @query("q_sim_ann_ivf")  # approximate; recall vs brute force asserted in pytest
@@ -1778,6 +1773,32 @@ def q_sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _synth_media(
+    spark: SparkSession,
+    sf_dir: str,
+    n_docs: int,
+    row,
+    schema="media_id long, payload binary",
+) -> DataFrame:
+    """One synthetic media row per doc with doc_id < n_docs, built
+    executor-side by ``row(doc_id)`` inside an Arrow-batched mapInPandas,
+    so the payload bytes are born on the executor."""
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < n_docs)
+        .select("doc_id")
+    )
+    columns = ["media_id", "payload"] if isinstance(schema, str) else schema.fieldNames()
+
+    def synth(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame([row(int(mid)) for mid in pdf["doc_id"]], columns=columns)
+
+    return d.mapInPandas(synth, schema=schema)
+
+
 @query("q_multimodal_resize")  # binary pixel path — rows-only; pixel math
 # proven against driver-side recomputation in tests/test_llm_ops.py
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1792,24 +1813,12 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only with pytest covering the resample against numpy."""
     from etl4s_spark.operators.multimodal import MEDIA_SCHEMA, encode_bmp, resize_images
 
-    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 64).select("doc_id")
+    def image(mid):
+        rng = np.random.default_rng(mid)
+        px = rng.integers(0, 256, (12, 9, 3), dtype=np.uint8)
+        return (mid, "image/bmp", encode_bmp(px), 9, 12)
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"]:
-                rng = np.random.default_rng(int(mid))
-                px = rng.integers(0, 256, (12, 9, 3), dtype=np.uint8)
-                rows.append((int(mid), "image/bmp", encode_bmp(px), 9, 12))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "mime", "payload", "meta_width", "meta_height"],
-            )
-
-    media = d.mapInPandas(synth, schema=MEDIA_SCHEMA)
+    media = _synth_media(spark, sf_dir, 64, image, MEDIA_SCHEMA)
     resized = resize_images(media, width=4, height=6)
     return resized.select(
         "media_id",
@@ -1839,29 +1848,14 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         frame_sample,
     )
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 48)
-        .select("doc_id")
-    )
+    def video(mid):
+        frames = []
+        for i in range(6):
+            rng = np.random.default_rng(mid * 7 + i)
+            frames.append(encode_bmp(rng.integers(0, 256, (6, 8, 3), dtype=np.uint8)))
+        return (mid, encode_frame_container(frames))
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"]:
-                frames = []
-                for i in range(6):
-                    rng = np.random.default_rng(int(mid) * 7 + i)
-                    frames.append(
-                        encode_bmp(rng.integers(0, 256, (6, 8, 3), dtype=np.uint8))
-                    )
-                rows.append((int(mid), encode_frame_container(frames)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = d.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _synth_media(spark, sf_dir, 48, video)
     return frame_sample(media, every_n=2).orderBy("media_id", "frame_idx")
 
 
@@ -1880,28 +1874,15 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side recompute parity."""
     from etl4s_spark.operators.multimodal import encode_bmp, image_ahash
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 96)
-        .select("doc_id")
-    )
+    def image(mid):
+        base_rng = np.random.default_rng(mid % 12)
+        px = base_rng.integers(40, 216, (16, 16, 3), dtype=np.uint8)
+        noise_rng = np.random.default_rng(10_000 + mid)
+        mask = noise_rng.integers(0, 2, (16, 16, 1), dtype=np.uint8)
+        px = np.clip(px.astype(np.int16) + mask, 0, 255).astype(np.uint8)
+        return (mid, encode_bmp(px))
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"]:
-                base_rng = np.random.default_rng(int(mid) % 12)
-                px = base_rng.integers(40, 216, (16, 16, 3), dtype=np.uint8)
-                noise_rng = np.random.default_rng(10_000 + int(mid))
-                mask = noise_rng.integers(0, 2, (16, 16, 1), dtype=np.uint8)
-                px = np.clip(px.astype(np.int16) + mask, 0, 255).astype(np.uint8)
-                rows.append((int(mid), encode_bmp(px)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = d.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _synth_media(spark, sf_dir, 96, image)
     return (
         image_ahash(media)
         .groupBy("ahash")
@@ -1956,32 +1937,15 @@ def q_multimodal_phash_checkable(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight, −2^63)."""
     from etl4s_spark.operators.multimodal import encode_bmp, image_ahash
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 96)
-        .select("doc_id")
-    )
+    def image(mid):
+        p, b = mid % 12, mid % 40
+        v = np.array(
+            [[40 + ((y * 8 + x) * (p + 3)) % 160 + b for x in range(8)] for y in range(8)],
+            dtype=np.uint8,
+        )
+        return (mid, encode_bmp(np.stack([v, v, v], axis=-1)))
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                p, b = mid % 12, mid % 40
-                v = np.array(
-                    [
-                        [40 + ((y * 8 + x) * (p + 3)) % 160 + b for x in range(8)]
-                        for y in range(8)
-                    ],
-                    dtype=np.uint8,
-                )
-                rows.append((mid, encode_bmp(np.stack([v, v, v], axis=-1))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = d.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _synth_media(spark, sf_dir, 96, image)
     return (
         image_ahash(media)
         .groupBy("ahash")
@@ -2038,32 +2002,18 @@ def q_multimodal_frames_checkable(spark: SparkSession, sf_dir: str) -> DataFrame
         frame_sample,
     )
 
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 48)
-        .select("doc_id")
-    )
+    def video(mid):
+        frames = []
+        for f in range(4 + mid % 5):
+            v = np.array(
+                [30 + ((mid % 50) + 7 * f + 13 * y) % 200 for y in range(8)],
+                dtype=np.uint8,
+            )
+            px = np.repeat(v[:, None], 8, axis=1)
+            frames.append(encode_bmp(np.stack([px, px, px], axis=-1)))
+        return (mid, encode_frame_container(frames))
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                frames = []
-                for f in range(4 + mid % 5):
-                    v = np.array(
-                        [30 + ((mid % 50) + 7 * f + 13 * y) % 200 for y in range(8)],
-                        dtype=np.uint8,
-                    )
-                    px = np.repeat(v[:, None], 8, axis=1)
-                    frames.append(encode_bmp(np.stack([px, px, px], axis=-1)))
-                rows.append((mid, encode_frame_container(frames)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = d.mapInPandas(synth, schema="media_id long, payload binary")
+    media = _synth_media(spark, sf_dir, 48, video)
     return (
         frame_sample(media, every_n=2)
         .select("media_id", "frame_idx", "width", "height", "mean_intensity")
@@ -3905,6 +3855,34 @@ def q_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall_tally(truth: DataFrame, proposed: DataFrame) -> DataFrame:
+    """One-row recall audit (n_truth, n_proposed, n_hits, recall) of a
+    proposed pair set against the truth pairs. Truth and proposed meet in
+    ONE full-outer join + aggregate — each side is consumed exactly once,
+    so no pair checkpoints and no separate count() actions: a single job
+    (guide §5: fewer driver round-trips / actions). The final-row
+    arithmetic (Python round) is unchanged bit-for-bit from the count()
+    form. Precondition: truth and proposed are each a SET of (id_a, id_b)
+    pairs. The sums equal the count() actions only then; a duplicate pair
+    on either side fans out in the join and inflates n_truth/n_proposed
+    and hits."""
+    both = truth.withColumn("__t", F.lit(1)).join(
+        proposed.withColumn("__p", F.lit(1)), ["id_a", "id_b"], "full_outer"
+    )
+    row = both.agg(
+        F.sum("__t").alias("n_truth"),
+        F.sum("__p").alias("n_proposed"),
+        F.sum(F.col("__t") * F.col("__p")).alias("hits"),
+    ).collect()[0]
+    n_truth = int(row["n_truth"] or 0)
+    n_proposed = int(row["n_proposed"] or 0)
+    hits = int(row["hits"] or 0)
+    return truth.sparkSession.createDataFrame(
+        [(n_truth, n_proposed, hits, round(hits / max(1.0, n_truth), 6))],
+        "n_truth long, n_proposed long, n_hits long, recall double",
+    )
+
+
 @query(
     "q_audit_lsh_recall",
     oracle="""
@@ -3999,31 +3977,11 @@ def q_audit_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the banding candidates re-derive from the SAME checkpointed shingle
     # relation instead of re-scanning + re-shingling the corpus (the
     # r12-identified residue: `proposed` was ~half this query's wall).
-    # Truth and proposed then meet in ONE full-outer join + aggregate —
-    # each side is consumed exactly once, so the two eager pair
-    # checkpoints and the three separate count() actions collapse into a
-    # single job (guide §5: fewer driver round-trips / actions). The
-    # final-row arithmetic (Python round) is unchanged bit-for-bit.
-    # Precondition: truth and proposed are each a SET of (id_a, id_b)
-    # pairs (both come out of a groupBy on the pair). The sums below equal
-    # the old count() actions only then; a duplicate pair on either side
-    # fans out in the join and inflates n_truth/n_proposed and hits.
+    # Both sets are groupBy outputs on the pair, so _recall_tally's set
+    # precondition holds (pinned by
+    # tests/test_llm_ops.py::test_recall_audit_truth_pairs_are_distinct).
     proposed = _minhash_checkable_pairs(sh).select("id_a", "id_b")
-    both = truth.withColumn("__t", F.lit(1)).join(
-        proposed.withColumn("__p", F.lit(1)), ["id_a", "id_b"], "full_outer"
-    )
-    row = both.agg(
-        F.sum("__t").alias("n_truth"),
-        F.sum("__p").alias("n_proposed"),
-        F.sum(F.col("__t") * F.col("__p")).alias("hits"),
-    ).collect()[0]
-    n_truth = int(row["n_truth"] or 0)
-    n_proposed = int(row["n_proposed"] or 0)
-    hits = int(row["hits"] or 0)
-    return spark.createDataFrame(
-        [(n_truth, n_proposed, hits, round(hits / max(1.0, n_truth), 6))],
-        "n_truth long, n_proposed long, n_hits long, recall double",
-    )
+    return _recall_tally(truth, proposed)
 
 
 @query(
@@ -4090,30 +4048,11 @@ def q_audit_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bands = _int_plane_bands(spark, e, 32).localCheckpoint(eager=True)
     proposed = _band_pairs(bands)
-    # ONE full-outer join + aggregate instead of two pair checkpoints +
-    # three count() actions (r13; same move as q_audit_lsh_recall) —
-    # each side is consumed exactly once, the final-row Python
-    # arithmetic is unchanged bit-for-bit. Precondition: truth and
-    # proposed are each a SET of (id_a, id_b) pairs (one row per pair
-    # from embedding_neardup_pairs, and proposed's .distinct()); a
-    # duplicate pair on either side fans out in the join and inflates
-    # the sums, so do not drop that .distinct(). The truth side is pinned
-    # by tests/test_llm_ops.py::test_recall_audit_truth_pairs_are_distinct.
-    both = truth.withColumn("__t", F.lit(1)).join(
-        proposed.withColumn("__p", F.lit(1)), ["id_a", "id_b"], "full_outer"
-    )
-    row = both.agg(
-        F.sum("__t").alias("n_truth"),
-        F.sum("__p").alias("n_proposed"),
-        F.sum(F.col("__t") * F.col("__p")).alias("hits"),
-    ).collect()[0]
-    n_truth = int(row["n_truth"] or 0)
-    n_proposed = int(row["n_proposed"] or 0)
-    hits = int(row["hits"] or 0)
-    return spark.createDataFrame(
-        [(n_truth, n_proposed, hits, round(hits / max(1.0, n_truth), 6))],
-        "n_truth long, n_proposed long, n_hits long, recall double",
-    )
+    # _recall_tally's set precondition: one row per pair from
+    # embedding_neardup_pairs, and proposed's .distinct() — do not drop
+    # that .distinct(). Both sides are pinned by
+    # tests/test_llm_ops.py::test_recall_audit_truth_pairs_are_distinct.
+    return _recall_tally(truth, proposed)
 
 
 @query(

@@ -23,7 +23,7 @@ from etl4s_spark.functions.exact import d38
 from etl4s_spark.operators.parallelism import widen
 from etl4s_spark.operators.ranking import one_part
 from etl4s_spark.queries import query
-from etl4s_spark.queries.analytics import _PAIRS_SQL, _neardup_pairs
+from etl4s_spark.queries.analytics import _PAIRS_SQL, _daily_series, _neardup_pairs
 from etl4s_spark.sources.tables import load_table
 
 
@@ -556,21 +556,7 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_agg_weighted_median recipe, integer arithmetic end-to-end). OLS
     comes from exact bigint moment sums over the integer day index."""
     ev = load_table(spark, sf_dir, "events")
-    span = ev.agg(
-        F.date_trunc("DAY", F.min("ts")).alias("d0"),
-        F.date_trunc("DAY", F.max("ts")).alias("d1"),
-    )
-    grid = span.select(
-        F.explode(
-            F.sequence(F.col("d0"), F.col("d1"), F.expr("interval 1 day"))
-        ).alias("day")
-    )
-    counts = ev.groupBy(F.date_trunc("DAY", "ts").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") == "click", 1)).alias("cy")
-    )
-    daily = grid.join(counts, "day", "left").select(
-        "day", F.coalesce("cy", F.lit(0)).alias("y")
-    )
+    daily = _daily_series(ev, y=F.sum(F.when(F.col("event_type") == "click", 1)))
     # VERDICT r5 item 5 (14-exchange plan): materialize the day-indexed
     # series ONCE (localCheckpoint, one row per day) so the pair join and
     # the OLS moments read it without re-deriving the fact-table subtree

@@ -68,9 +68,7 @@ def q_graph_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     traversal is non-vacuous at every SF."""
     from etl4s_spark.operators.graph import bfs_hops, symmetrize
 
-    pairs = _neardup_pairs(spark, sf_dir, materialize=False).localCheckpoint(
-        eager=True
-    )
+    pairs = _neardup_pairs(spark, sf_dir)
     seeds = (
         symmetrize(pairs)
         .select(F.col("src").alias("vec_id"))

@@ -426,16 +426,14 @@ def q_sql_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import uuid
 
-    # Materialize the edge list once (localCheckpoint: every recursion
-    # level re-evaluates the CTE's inputs, and without it the O(n²·d)
-    # cosine pair generation would run once PER HOP; unlike cache() it
-    # leaves no CacheManager entry behind — ADVICE r5). The view name is
-    # uuid-suffixed and dropped right after analysis so concurrent runs
-    # in one session can't clobber each other (ADVICE r5).
+    # _neardup_pairs materializes the edge list once (localCheckpoint:
+    # every recursion level re-evaluates the CTE's inputs, and without it
+    # the O(n²·d) cosine pair generation would run once PER HOP; unlike
+    # cache() it leaves no CacheManager entry behind — ADVICE r5). The
+    # view name is uuid-suffixed and dropped right after analysis so
+    # concurrent runs in one session can't clobber each other (ADVICE r5).
     view = f"__ndp_edges_{uuid.uuid4().hex}"
-    edges = _neardup_pairs(spark, sf_dir, materialize=False).localCheckpoint(
-        eager=True
-    )
+    edges = _neardup_pairs(spark, sf_dir)
     edges.createOrReplaceTempView(view)
     out = spark.sql(f"""
         WITH RECURSIVE sym AS (

@@ -44,6 +44,32 @@ def test_lazy_query_runs_no_build_job_when_warm(spark, sf_dir):
     assert a["cpu_s"] >= a["pyworker_cpu_s"] >= 0
 
 
+def test_cpu_snapshot_reads_proc_once(spark, sf_dir, monkeypatch):
+    """run_query lists /proc once per CPU snapshot (before and after the
+    run) however many processes live below the JVM, and the share below
+    the JVM is part of the tree's total. A Python-worker query first
+    leaves the JVM a live daemon child."""
+    import glob
+    import os
+
+    _runs(spark, sf_dir, "q_multimodal_phash_checkable", 1)
+    jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
+    kids = "".join(open(f).read() for f in glob.glob(f"/proc/{jvm}/task/*/children"))
+    assert kids.split(), "no live process below the JVM"
+    scandir, calls = os.scandir, []
+
+    def counting(path=".", *args):
+        calls.append(os.fspath(path))
+        return scandir(path, *args)
+
+    monkeypatch.setattr(os, "scandir", counting)
+    rec = run_query(spark, "q_agg_groupby", sf_dir)
+    monkeypatch.undo()
+    assert rec["error"] is None
+    assert calls.count("/proc") <= 2, calls
+    assert 0 <= rec["pyworker_cpu_s"] <= rec["cpu_s"]
+
+
 def test_actions_yield_rows_and_plans(spark, sf_dir):
     pandas = run_query(spark, "q_agg_groupby", sf_dir, "pandas")
     assert pandas["rows"] == len(pandas["result"]) > 0

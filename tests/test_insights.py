@@ -309,3 +309,20 @@ def test_asof_all_directions_match_pandas_random(spark):
             for row in want_df.itertuples():
                 want = None if pd.isna(row.value) else row.value
                 assert got[row.id] == want, (seed, direction, row.id, got[row.id], want)
+
+
+def test_rfm_segmentation_keeps_every_customer_scored(spark, sf_dir):
+    """q_rfm_segmentation's bucket join is a plain equi-join on bkt, safe
+    only while recency_days and monetary_cents are never NULL (the
+    invariant stated at that join). A customer whose bucket row the join
+    dropped would leave the segment counts short or carry a NULL score."""
+    from etl4s_spark.queries import QUERIES, load_all
+    from etl4s_spark.sources.tables import load_table
+
+    load_all()
+    rows = QUERIES["q_rfm_segmentation"](spark, sf_dir).collect()
+    n_cust = load_table(spark, sf_dir, "orders").select("o_custkey").distinct().count()
+    assert n_cust > 0
+    assert sum(r.n_customers for r in rows) == n_cust
+    assert not [r for r in rows if None in (r.r_score, r.f_score, r.m_score)]
+

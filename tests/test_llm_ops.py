@@ -518,14 +518,18 @@ def test_embedding_neardup_pairs_edge_rows(spark):
         embedding_neardup_pairs(tiny, "id", "v", 0.4).collect()
 
 
-def test_recall_audit_truth_pairs_are_distinct(spark, sf_dir):
+def test_recall_audit_truth_pairs_are_distinct(spark, sf_dir, monkeypatch):
     """q_audit_ann_recall and q_audit_lsh_threshold_sweep count hits by
     joining their truth pairs to the proposed ones, so a repeated
     (id_a, id_b) in the truth would count twice (the precondition stated
     in queries/llm.py). Their truth is embedding_neardup_pairs over the
     first 500 vectors at 0.4 and 0.3; on the test data it holds no
-    repeated pair."""
+    repeated pair. The two recall audits hand both sides to llm.py's
+    _recall_tally, whose sums hold only for pair SETS: q_audit_lsh_recall's
+    shingle-Jaccard truth and _minhash_checkable_pairs proposals, and
+    q_audit_ann_recall's band candidates, hold no repeated pair either."""
     from etl4s_spark.operators.similarity import embedding_neardup_pairs
+    from etl4s_spark.queries import llm
     from etl4s_spark.sources.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
@@ -533,6 +537,18 @@ def test_recall_audit_truth_pairs_are_distinct(spark, sf_dir):
         truth = embedding_neardup_pairs(e, "vec_id", "embedding", threshold=threshold)
         pairs = [(r.id_a, r.id_b) for r in truth.collect()]
         assert pairs and len(set(pairs)) == len(pairs), threshold
+
+    sides = {}
+
+    def capture(truth, proposed):
+        sides.update(truth=truth, proposed=proposed)
+
+    monkeypatch.setattr(llm, "_recall_tally", capture)
+    for audit in (llm.q_audit_lsh_recall, llm.q_audit_ann_recall):
+        audit(spark, sf_dir)
+        for side, df in sides.items():
+            pairs = [(r.id_a, r.id_b) for r in df.collect()]
+            assert pairs and len(set(pairs)) == len(pairs), (audit.__name__, side)
 
 
 def test_ann_ivf_recall_vs_brute_force(spark, sf_dir):
@@ -754,16 +770,14 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         assert _cc_labels(pairs) == want, f"graph {gi} diverges from union-find"
 
 
-def test_connected_components_modes(spark, tmp_path):
-    """Job ceiling and reliable-checkpoint contract (VERDICT r2 item 5).
-    Every round is one eager checkpoint whose convergence count rides on
-    DataFrame.observe, so two cliques + a bridge (diameter 3) cost a
-    fixed job budget: three rounds of (two shuffles + the checkpoint's
-    result job) and the collect — 10 jobs, where the min-label sweeps
-    this routine replaced ran 24. A per-round count() or first() would
-    push it past the ceiling."""
-    from etl4s_spark.operators.dedup import connected_components
-
+def test_connected_components_modes(spark):
+    """Job ceiling (VERDICT r2 item 5). Every round is one eager
+    checkpoint whose convergence count rides on DataFrame.observe, so
+    two cliques + a bridge (diameter 3) cost a fixed job budget: three
+    rounds of (two shuffles + the checkpoint's result job) and the
+    collect — 10 jobs, where the min-label sweeps this routine replaced
+    ran 24. A per-round count() or first() would push it past the
+    ceiling."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (4, 6), (10, 11)],
         "id_a long, id_b long",
@@ -772,17 +786,6 @@ def test_connected_components_modes(spark, tmp_path):
     labels, n_jobs = _count_jobs(spark, "cc_jobs", lambda: _cc_labels(pairs))
     assert labels == want
     assert n_jobs <= 10, n_jobs
-
-    # reliable checkpoint mode: same labels, files land in checkpoint_dir
-    ckpt = str(tmp_path / "cc_ckpt")
-    reliable = {
-        r.id: r.component
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
-    }
-    assert reliable == want
-    import os
-
-    assert any(os.scandir(ckpt))
 
 
 def test_connected_components_star_matches_minlabel(spark):
@@ -1475,8 +1478,12 @@ def test_temperature_sampling_upweights_tail(spark):
 
 # The queries built on the shared checkable-sketch and exact-cosine
 # helpers (llm.py _checkable_shingles, _int_plane_bands, _band_pairs,
-# _cosine_scan), on similarity.sq_l2 and on graph.bfs_hops, each against
-# its own oracle.
+# _cosine_scan, _recall_tally, _synth_media), on similarity.sq_l2 and
+# _cosine_topk_tail, on graph.bfs_hops and dedup.connected_components,
+# on the daily-series, part-basket, weighted-histogram and as-of helpers
+# (analytics._daily_series, insights._part_basket,
+# aggregates._weighted_cents_cum, joins._asof_purchase_click) and on
+# analytics._neardup_pairs, each against its own oracle.
 _SHARED_HELPER_QUERIES = [
     "q_dedup_minhash_checkable",
     "q_audit_lsh_recall",
@@ -1493,6 +1500,28 @@ _SHARED_HELPER_QUERIES = [
     "q_cluster_update_step",
     "q_cluster_labels",
     "q_graph_shortest_hops",
+    "q_sim_cosine_topk",
+    "q_multimodal_phash_checkable",
+    "q_multimodal_frames_checkable",
+    "q_dedup_cluster_canonical",
+    "q_dedup_cluster_star",
+    "q_dedup_cluster_sizes",
+    "q_er_fuzzy_clusters",
+    "q_sql_recursive_bfs",
+    "q_ts_decompose",
+    "q_ts_cross_corr",
+    "q_forecast_backtest",
+    "q_stat_mann_kendall",
+    "q_stat_durbin_watson",
+    "q_ts_theil_sen",
+    "q_price_index",
+    "q_price_volume_mix",
+    "q_agg_weighted_median",
+    "q_agg_weighted_percentiles",
+    "q_join_asof",
+    "q_join_asof_tolerance",
+    "q_join_asof_forward",
+    "q_join_asof_nearest",
 ]
 
 

@@ -39,7 +39,7 @@ import os
 import statistics
 import time
 
-from perfbench.run import CLK_TCK, TABLES, tree_cpu_s  # noqa: F401
+from perfbench.run import CLK_TCK, TABLES  # noqa: F401
 
 _runs = itertools.count()
 
@@ -68,21 +68,39 @@ def jit_cpu_s(before: dict[int, int], after: dict[int, int]) -> float:
     return sum(t - before.get(tid, 0) for tid, t in after.items()) / CLK_TCK
 
 
-def pyworker_cpu_s(jvm_pid: int) -> float:
-    """CPU seconds of every process below the JVM: the children it has
-    reaped, plus the process tree of each live child (listed per JVM
-    thread in /proc/<pid>/task/<tid>/children)."""
-    kids: set[int] = set()
-    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
-        try:
-            with open(f"/proc/{jvm_pid}/task/{tid}/children") as f:
-                kids.update(map(int, f.read().split()))
-        except OSError:  # thread ended during the scan
+def cpu_snapshot(jvm_pid: int) -> tuple[float, float]:
+    """CPU seconds (user + system) of this process's tree and of every
+    process below the JVM, from ONE read of /proc. Each process counts
+    with the children it has reaped, so the JVM's share below it is its
+    subtree minus its own threads: Python workers and the helpers it
+    forks, live or reaped."""
+    procs = {}
+    for entry in os.scandir("/proc"):
+        if not entry.name.isdigit():
             continue
-    with open(f"/proc/{jvm_pid}/stat") as f:
-        fields = f.read().rsplit(")", 1)[1].split()
-    reaped = (int(fields[13]) + int(fields[14])) / CLK_TCK
-    return reaped + sum(tree_cpu_s(k) for k in kids)
+        try:
+            with open(f"/proc/{entry.name}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # ended during the scan
+            continue
+        # fields[1] is the ppid; [11:15] utime, stime, cutime, cstime
+        ut, st, cut, cst = map(int, fields[11:15])
+        procs[int(entry.name)] = (int(fields[1]), ut + st, cut + cst)
+    children: dict[int, list[int]] = {}
+    for pid, (ppid, _, _) in procs.items():
+        children.setdefault(ppid, []).append(pid)
+
+    def tree(root: int) -> int:
+        ticks, stack = 0, [root]
+        while stack:
+            pid = stack.pop()
+            _, own, reaped = procs.get(pid, (0, 0, 0))
+            ticks += own + reaped
+            stack.extend(children.get(pid, ()))
+        return ticks
+
+    below_jvm = tree(jvm_pid) - procs.get(jvm_pid, (0, 0, 0))[1]
+    return tree(os.getpid()) / CLK_TCK, below_jvm / CLK_TCK
 
 
 def _noop(df):
@@ -136,7 +154,7 @@ def run_query(spark, name: str, sf_dir: str, action: str = "noop") -> dict:
     tag = f"{name}:{next(_runs)}"
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     rec: dict = {"query": name, "build_s": None, "exec_s": None, "rows": None, "error": None}
-    c0, j0, w0 = tree_cpu_s(os.getpid()), jit_thread_ticks(jvm_pid), pyworker_cpu_s(jvm_pid)
+    (c0, w0), j0 = cpu_snapshot(jvm_pid), jit_thread_ticks(jvm_pid)
     try:
         sc.addJobTag(f"{tag}:build")
         t = time.perf_counter()
@@ -154,7 +172,7 @@ def run_query(spark, name: str, sf_dir: str, action: str = "noop") -> dict:
     finally:
         for phase in ("build", "exec"):
             sc.removeJobTag(f"{tag}:{phase}")
-    w1, j1, c1 = pyworker_cpu_s(jvm_pid), jit_thread_ticks(jvm_pid), tree_cpu_s(os.getpid())
+    j1, (c1, w1) = jit_thread_ticks(jvm_pid), cpu_snapshot(jvm_pid)
     rec["cpu_s"] = round(c1 - c0, 2)
     rec["jit_cpu_s"] = round(jit_cpu_s(j0, j1), 2)
     rec["pyworker_cpu_s"] = round(w1 - w0, 2)
